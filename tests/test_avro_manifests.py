@@ -235,15 +235,16 @@ def test_compaction_rewrites_manifest_with_tombstones(spark, tmp_path):
 
 
 def test_rebuilt_metadata_manifests_match_each_snapshot(spark, tmp_path):
-    """The self-heal rebuild regenerates per-snapshot manifests whose live
-    set equals the table AS OF that snapshot (time travel through Avro)."""
+    """Catching up after a lost metadata write regenerates per-snapshot
+    manifests whose live set equals the table AS OF that snapshot (time
+    travel through Avro)."""
     t = EventTable(spark, str(tmp_path), "events")
     t.append(prepare_events(_batch(spark, 0, 5)))
     t.append(prepare_events(_batch(spark, 5, 5), existing=t.read()))
     mdir = os.path.join(t.path, "metadata")
     with open(os.path.join(mdir, "version-hint.text"), "w") as fh:
         fh.write("1")  # simulate a lost metadata write
-    t.append(prepare_events(_batch(spark, 10, 5), existing=t.read()))  # → rebuild
+    t.append(prepare_events(_batch(spark, 10, 5), existing=t.read()))  # → catch-up
 
     meta = _current_meta(t)
     assert len(meta["snapshots"]) == 3

@@ -462,6 +462,45 @@ def test_streaming_ingest_runs_policy_tick_per_batch(spark, tmp_path):
     assert len(table.files()) <= pol.compact_trigger_files
 
 
+def test_failing_maintenance_tick_is_logged_and_batch_commits_once(spark, tmp_path, caplog):
+    """A maintenance tick that raises after the data commit is logged,
+    never re-raised: re-raising would fail the micro-batch and its replay
+    would append the unkeyed events twice. The batch commits exactly
+    once and the warning carries the failure."""
+    import json as _json
+    import logging
+
+    class ExplodingPolicy:
+        ticks = 0
+
+        def run_due(self):
+            self.ticks += 1
+            raise RuntimeError("maintenance tick exploded")
+
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    with open(os.path.join(landing, "b0.json"), "w") as fh:
+        for i in range(6):
+            fh.write(_json.dumps({
+                "topic": "t1", "partition": 0, "payload": f"p-{i}",
+                "timestamp_ms": 1700000000000 + i, "idempotency_key": None,
+                "ingest_order": i,
+            }) + "\n")
+    table = EventTable(spark, str(tmp_path), "stream-events")
+    pol = ExplodingPolicy()
+    ing = StreamingIngest(
+        spark, landing, table, str(tmp_path / "ckpt"), maintenance_policy=pol
+    )
+    with caplog.at_level(logging.WARNING, logger="zombi_spark.streaming.ingest"):
+        ing.start(available_now=True).awaitTermination(120)
+    assert pol.ticks == 1
+    assert [s["version"] for s in table.snapshots()] == [0]
+    assert table.read().count() == 6
+    warned = [r for r in caplog.records if r.name == "zombi_spark.streaming.ingest"]
+    assert len(warned) == 1 and "maintenance tick" in warned[0].getMessage()
+    assert "maintenance tick exploded" in str(warned[0].exc_info[1])
+
+
 def test_policy_one_failing_action_does_not_skip_the_rest(spark, tmp_path):
     """Per-action fault isolation (ADVICE r10 / reference flusher's
     per-item error handling): retention raising an OSError must still be

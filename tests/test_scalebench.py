@@ -95,6 +95,10 @@ def test_pipeline_e2e_ledger_is_deterministic(spark, tmp_path):
 
     e1: dict = {}
     bench.run_pipeline_e2e(spark, "/root/testdata/sf0.01", str(tmp_path / "a"), e1)
+    # golden ledger. To regenerate it after a deliberate stage change, run
+    # bench.run_pipeline_e2e(spark, <the sf0.01 dir above>, out, e) once
+    # in a fresh session, with e = {} and any empty scratch dir as out,
+    # and paste e["pipeline_e2e_rows"] here
     assert e1["pipeline_e2e_rows"] == [500, 500, 492, 489, 489, 426, 449, 208, 400]
     ledger = e1["pipeline_e2e_rows"]
     assert len(ledger) == 9 and ledger[0] > 0

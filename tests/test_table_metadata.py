@@ -128,8 +128,8 @@ def test_iceberg_v2_metadata_written_per_commit(spark, tmp_path):
 
 def test_iceberg_metadata_self_heals_after_lost_write(spark, tmp_path):
     """A lost metadata write (crash between snapshot commit and metadata
-    write) must not silently diverge: the next commit detects the gap and
-    rebuilds the Iceberg metadata from the snapshot log."""
+    write) must not silently diverge: the next commit finds the gap and
+    catches the Iceberg metadata up from the snapshot log."""
     t = EventTable(spark, str(tmp_path), "events")
     t.append(prepare_events(_batch(spark, 0, 4)))
     mdir = os.path.join(t.path, "metadata")
@@ -138,7 +138,8 @@ def test_iceberg_metadata_self_heals_after_lost_write(spark, tmp_path):
     t.append(prepare_events(_batch(spark, 4, 4)))
     with open(os.path.join(mdir, "version-hint.text"), "w") as fh:
         fh.write("1")
-    # next commit sees 1 recorded snapshot but commits version 2 → rebuild
+    # next commit finds the cursor at version 0 but commits version 2 →
+    # it catches up versions 1 and 2
     t.append(prepare_events(_batch(spark, 8, 4)))
     hint = int(open(os.path.join(mdir, "version-hint.text")).read())
     meta = json.load(open(os.path.join(mdir, f"v{hint}.metadata.json")))
@@ -146,6 +147,61 @@ def test_iceberg_metadata_self_heals_after_lost_write(spark, tmp_path):
     assert meta["snapshots"][-1]["sequence-number"] == 3
     chain = [s.get("parent-snapshot-id") for s in meta["snapshots"]]
     assert chain[0] is None and all(c is not None for c in chain[1:])
+
+
+def test_failed_metadata_write_is_logged_and_caught_up(spark, tmp_path, monkeypatch, caplog):
+    """The one catch around the metadata writer: a failed write logs one
+    warning and never fails the data commit, and the next append catches
+    up both versions incrementally — same table-uuid, a metadata-log that
+    extends the previous file, and per-snapshot manifests that match the
+    engine's own scan plan."""
+    import logging
+
+    from zombi_spark.table import manifests as MF
+
+    t = EventTable(spark, str(tmp_path), "events")
+    t.append(prepare_events(_batch(spark, 0, 4)))
+    mdir = os.path.join(t.path, "metadata")
+    uuid_before = json.load(open(os.path.join(mdir, "v1.metadata.json")))["table-uuid"]
+
+    real = MF.write_manifest_list
+    calls = []
+
+    def fail_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise OSError("injected manifest-list write failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(MF, "write_manifest_list", fail_once)
+    with caplog.at_level(logging.WARNING, logger="zombi_spark.table.event_table"):
+        t.append(prepare_events(_batch(spark, 4, 4)))
+    warned = [
+        r for r in caplog.records
+        if r.name == "zombi_spark.table.event_table" and r.exc_info is not None
+    ]
+    assert len(warned) == 1 and "iceberg metadata" in warned[0].getMessage()
+    assert t.latest_version() == 1  # the data commit stands
+    assert t.read().count() == 8
+    assert open(os.path.join(mdir, "version-hint.text")).read() == "1"
+
+    t.append(prepare_events(_batch(spark, 8, 4)))
+    hint = int(open(os.path.join(mdir, "version-hint.text")).read())
+    meta = json.load(open(os.path.join(mdir, f"v{hint}.metadata.json")))
+    assert meta["table-uuid"] == uuid_before
+    assert meta["properties"]["zombi.last-version"] == "2"
+    assert meta["metadata-log"][-1]["metadata-file"] == os.path.abspath(
+        os.path.join(mdir, "v1.metadata.json")
+    )
+    assert [s["sequence-number"] for s in meta["snapshots"]] == [1, 2, 3]
+    for ice in meta["snapshots"]:
+        live = {df["file_path"] for df in MF.live_data_files(ice["manifest-list"])}
+        assert live == {
+            os.path.abspath(e["file_path"])
+            for e in t.scan_files(version=ice["sequence-number"] - 1)
+        }
+    # caught up by carry-forward, not rebuilt: one manifest per append
+    assert len(MF.read_manifest_list(meta["snapshots"][-1]["manifest-list"])) == 3
 
 
 def test_iceberg_metadata_tracks_expiration(spark, tmp_path):
@@ -197,8 +253,8 @@ def test_commits_after_expiration_stay_incremental_and_keep_uuid(spark, tmp_path
 
 
 def test_rebuild_preserves_table_uuid(spark, tmp_path):
-    """The self-heal rebuild path must adopt the prior metadata's
-    table-uuid instead of minting a new one."""
+    """Catching up after a lost metadata write must keep the prior
+    metadata's table-uuid instead of minting a new one."""
     t = EventTable(spark, str(tmp_path), "events")
     t.append(prepare_events(_batch(spark, 0, 4)))
     mdir = os.path.join(t.path, "metadata")
@@ -208,7 +264,7 @@ def test_rebuild_preserves_table_uuid(spark, tmp_path):
     t.append(prepare_events(_batch(spark, 4, 4)))
     with open(os.path.join(mdir, "version-hint.text"), "w") as fh:
         fh.write("1")  # simulate a lost metadata write
-    t.append(prepare_events(_batch(spark, 8, 4)))  # triggers rebuild
+    t.append(prepare_events(_batch(spark, 8, 4)))  # catches up versions 1-2
     hint = int(open(os.path.join(mdir, "version-hint.text")).read())
     meta = json.load(open(os.path.join(mdir, f"v{hint}.metadata.json")))
     assert len(meta["snapshots"]) == 3

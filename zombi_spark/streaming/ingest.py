@@ -48,6 +48,7 @@ tracks the retention window, not table history.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -270,7 +271,9 @@ class StreamingIngest:
             try:
                 self.rollup.refresh(blocking=False)
             except Exception:  # noqa: BLE001 — maintenance stays best-effort
-                pass
+                logging.getLogger(__name__).warning(
+                    "rollup fold after batch %d failed", batch_id, exc_info=True
+                )
         if self.maintenance_policy is not None:
             # same best-effort contract as the rollup fold: a maintenance
             # failure after the data commit must never fail the batch
@@ -283,7 +286,9 @@ class StreamingIngest:
                     finally:
                         self.maintenance_lock.release()
             except Exception:  # noqa: BLE001 — maintenance stays best-effort
-                pass
+                logging.getLogger(__name__).warning(
+                    "maintenance tick after batch %d failed", batch_id, exc_info=True
+                )
 
     def start(self, available_now: bool = True, processing_time: str = "5 seconds"):
         """Run the ingest query. ``available_now=True`` drains the landing

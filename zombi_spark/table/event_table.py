@@ -58,6 +58,7 @@ Scale notes:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
@@ -66,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zombi_spark.ingest.batch import EVENT_SCHEMA, validate_table_name
-from zombi_spark.table import fastjson
+from zombi_spark.table import fastjson, iceberg_meta
 
 _META_DIR = "_zombi_meta"
 _DATA_DIR = "data"
@@ -664,48 +665,17 @@ class EventTable:
             ) from None
         finally:
             os.unlink(tmp)
-        # Iceberg-v2 interop metadata: one v{N}.metadata.json per commit
-        # plus real Avro manifest(s) + manifest list
-        # (iceberg_storage.rs:1000-1161 contract)
+        # Iceberg-v2 interop metadata (iceberg_storage.rs:1000-1161
+        # contract) is derived from the log and never fails the commit: a
+        # failed write leaves the writer's cursor behind, and the next
+        # call catches up every version it missed
         try:
-            from zombi_spark.table.iceberg_meta import write_metadata_for_commit
-
-            if current is not None:
-                snap_for_meta = dict(snap)
-                snap_for_meta["parent_snapshot_hex"] = self._read_snapshot(
-                    f"snap-{current:08d}.json"
-                )["snapshot_id"]
-            else:
-                snap_for_meta = snap
-            write_metadata_for_commit(
-                self.path,
-                self.name,
-                snap_for_meta,
-                spark_schema=self.table_schema(),
-                active_entries_fn=lambda: self._active_files(version),
-                active_deletes_fn=lambda: self._active_delete_files(version),
-                backend=self.backend,
+            iceberg_meta.write_metadata_for_commit(self, snap)
+        except Exception:
+            logging.getLogger(__name__).warning(
+                "iceberg metadata write failed for %r version %d",
+                self.name, version, exc_info=True,
             )
-        except Exception as exc:
-            # interop metadata is derived state — never fail the commit.
-            # A detected gap (lost prior metadata write) self-heals by
-            # regenerating from the authoritative snapshot log.
-            import logging
-
-            try:
-                from zombi_spark.table.iceberg_meta import rebuild_metadata
-
-                rebuild_metadata(
-                    self.path, self.name, self.snapshots(),
-                    spark_schema=self.table_schema(), backend=self.backend,
-                )
-                logging.getLogger(__name__).warning(
-                    "iceberg metadata rebuilt after: %s", exc
-                )
-            except Exception as exc2:
-                logging.getLogger(__name__).warning(
-                    "iceberg metadata write failed: %s / rebuild failed: %s", exc, exc2
-                )
         return snap
 
     # ------------------------------------------------------- file manifests
@@ -2117,17 +2087,9 @@ class EventTable:
         whose list would otherwise grow one manifest per commit between
         compactions. Metadata-only; the engine's snapshot log is
         untouched (Iceberg files are derived state here)."""
-        from zombi_spark.table.iceberg_meta import rewrite_manifests
-
-        latest = self.latest_version()
-        if latest is None:
+        if self.latest_version() is None:
             raise ValueError("no snapshot to rewrite manifests for")
-        return rewrite_manifests(
-            self.path,
-            self._active_files(latest),
-            backend=self.backend,
-            active_deletes=self._active_delete_files(latest),
-        )
+        return iceberg_meta.rewrite_manifests(self)
 
     def expire_data_older_than(self, ts_ms: int) -> dict:
         """Cold-tier retention — the table-level sibling of the landing
@@ -2563,27 +2525,14 @@ class EventTable:
             os.remove(os.path.join(self.meta_path, fname))
         self._active_cache.clear()
         self._active_delete_cache.clear()
+        # drop the expired snapshots from the Iceberg metadata too
         try:
-            from zombi_spark.table.iceberg_meta import rewrite_after_expire
-
-            rewrite_after_expire(self.path, self.name, self.snapshots(), backend=self.backend)
-        except Exception as exc:
-            import logging
-
-            try:
-                from zombi_spark.table.iceberg_meta import rebuild_metadata
-
-                rebuild_metadata(
-                    self.path, self.name, self.snapshots(),
-                    spark_schema=self.table_schema(), backend=self.backend,
-                )
-                logging.getLogger(__name__).warning(
-                    "iceberg metadata rebuilt after expire: %s", exc
-                )
-            except Exception as exc2:
-                logging.getLogger(__name__).warning(
-                    "iceberg metadata rewrite failed: %s / rebuild failed: %s", exc, exc2
-                )
+            iceberg_meta.write_metadata_for_commit(self, self.latest_snapshot())
+        except Exception:
+            logging.getLogger(__name__).warning(
+                "iceberg metadata update after expire failed for %r",
+                self.name, exc_info=True,
+            )
         return expired
 
     def compact(

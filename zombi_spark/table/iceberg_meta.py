@@ -1,31 +1,44 @@
 """Iceberg-v2 table metadata (``metadata/v{N}.metadata.json``) for EventTable.
 
-The reference's whole cold-tier contract is "any engine reads the table"
+The reference's cold-tier contract is "any engine reads the table"
 (SPEC.md:343-352): iceberg_storage.rs:1000-1161 writes real
-``v{N}.metadata.json`` plus Avro manifest lists + manifests. Both halves
-are real here:
+``v{N}.metadata.json`` plus Avro manifest lists + manifests. Here the
+commit point is the engine's JSON snapshot log (``_zombi_meta/snap-N.json``)
+and this metadata is derived from it by ONE writer,
+:func:`write_metadata_for_commit` — the only code that adds snapshots to
+the metadata or drops them from it:
 
-  - every commit writes a spec-compliant Iceberg v2
-    ``v{N}.metadata.json`` (schemas with stable field-ids, identity
-    partition-spec on (event_date, event_hour), sort order
-    (timestamp_ms, sequence), full snapshot list + snapshot-log +
-    metadata-log) and a ``version-hint.text``, exactly the files a
-    filesystem (Hadoop-style) catalog resolves;
-  - each snapshot's ``manifest-list`` points at a real Avro manifest
-    list whose manifests carry the v2 ``manifest_entry`` records
-    (status, data_file with partition struct, record counts, and
-    little-endian single-value bounds keyed by field id) — written by
-    the in-repo Avro codec (table/avro_io.py; the container ships no
-    Avro library) and validated by round-trip decoding in tests,
-    including the reference's committed-watermark recovery
-    (iceberg_storage.rs:447-515) re-run over our bytes.
+  - its cursor is the ``zombi.last-version`` table property, the last log
+    version the metadata mirrors. A call appends every log version after
+    the cursor, oldest first; drops the Iceberg snapshots whose log
+    snapshot has expired, garbage-collecting the Avro files only they
+    referenced; then writes one ``v{N+1}.metadata.json`` and advances
+    ``version-hint.text`` — the files a filesystem (Hadoop-style) catalog
+    resolves. With nothing to add or drop (a concurrent writer already
+    caught up) it writes nothing;
+  - each snapshot's ``manifest-list`` is a real Avro manifest list whose
+    manifests carry the v2 ``manifest_entry`` records (status, data_file
+    with partition struct, record counts, and little-endian single-value
+    bounds keyed by field id) — written by the in-repo Avro codec
+    (table/avro_io.py; no Avro library is a dependency) and validated
+    by round-trip decoding in tests, including the reference's
+    committed-watermark recovery (iceberg_storage.rs:447-515) re-run over
+    our bytes.
 
-Cost per commit is O(metadata size + this commit's files) — an append
-writes ONE new manifest and carries the previous list forward
-(iceberg_storage.rs:1087-1110's carry-forward), while a commit that
-removes files (compaction) rewrites one full manifest of the survivors
-and resets the list. At 100 TB this tracks snapshot *count*, not data
-size, and :meth:`EventTable.expire_snapshots` keeps that bounded.
+Per-commit cost: a pure append writes ONE new manifest, carries the
+previous list forward (iceberg_storage.rs:1087-1110), and writes one list
+and one metadata JSON — it neither lists nor reads the snapshot log. A
+commit that removes files (compaction, retention), or a version with no
+previous Avro list, writes one full manifest of the survivors plus
+DELETED tombstones, whose row and byte counts come from the parent
+version's log entries. Cost tracks snapshot count, not data size, and
+:meth:`EventTable.expire_snapshots` bounds the count.
+
+Self-heal: the metadata is derived state, so a failed write is logged
+and the data commit stands. The cursor did not move, so the next call
+simply has more than one version to catch up: it lists the log once and
+appends them all. A deleted metadata directory regenerates the same way,
+from a fresh cursor.
 """
 
 from __future__ import annotations
@@ -34,37 +47,6 @@ import json
 import os
 import time
 import uuid
-
-# Stable Iceberg field-ids for the canonical 8-column event schema
-# (contracts/storage.rs:204-211). Order matches ingest.batch.EVENT_SCHEMA.
-_FIELDS = [
-    {"id": 1, "name": "sequence", "required": True, "type": "long"},
-    {"id": 2, "name": "topic", "required": True, "type": "string"},
-    {"id": 3, "name": "partition", "required": True, "type": "int"},
-    {"id": 4, "name": "payload", "required": True, "type": "binary"},
-    {"id": 5, "name": "timestamp_ms", "required": True, "type": "long"},
-    {"id": 6, "name": "idempotency_key", "required": False, "type": "string"},
-    {"id": 7, "name": "event_date", "required": True, "type": "date"},
-    {"id": 8, "name": "event_hour", "required": True, "type": "int"},
-]
-
-_SCHEMA = {"schema-id": 0, "type": "struct", "fields": _FIELDS}
-
-_PARTITION_SPEC = {
-    "spec-id": 0,
-    "fields": [
-        {"name": "event_date", "transform": "identity", "source-id": 7, "field-id": 1000},
-        {"name": "event_hour", "transform": "identity", "source-id": 8, "field-id": 1001},
-    ],
-}
-
-_SORT_ORDER = {
-    "order-id": 1,
-    "fields": [
-        {"transform": "identity", "source-id": 5, "direction": "asc", "null-order": "nulls-first"},
-        {"transform": "identity", "source-id": 1, "direction": "asc", "null-order": "nulls-first"},
-    ],
-}
 
 
 def snapshot_id_long(snapshot_hex: str) -> int:
@@ -161,8 +143,8 @@ def _evolve_schema(meta: dict, spark_schema) -> None:
     meta["last-column-id"] = max(next_id, meta["last-column-id"])
 
 
-def _fresh_metadata(table_path: str, table_name: str, spark_schema=None) -> dict:
-    fields = fields_for_spark_schema(spark_schema) if spark_schema is not None else _FIELDS
+def _fresh_metadata(table_path: str, table_name: str, spark_schema) -> dict:
+    fields = fields_for_spark_schema(spark_schema)
     fid = {f["name"]: f["id"] for f in fields}
     # partition spec / sort order reference field ids of THIS schema —
     # for extraction tables the ids shift (payload is dropped), so derive
@@ -218,8 +200,8 @@ def _write_next_metadata(mdir: str, meta: dict, backend=None) -> str:
     """Write ``meta`` as ``v{hint+1}.metadata.json`` and advance the
     hint. Metadata files are immutable, so numbering is monotonic in the
     HINT — never derived from snapshot versions, which would collide
-    with the extra metadata versions the rewrite paths (expire,
-    rewrite_manifests) mint and overwrite committed files in place."""
+    with the extra metadata versions that expiration and
+    rewrite_manifests mint and overwrite committed files in place."""
     tmp = os.path.join(mdir, f".metadata.{uuid.uuid4().hex[:8]}.tmp")
     from zombi_spark.table import fastjson
 
@@ -325,189 +307,101 @@ def _ensure_unpartitioned_spec(meta: dict) -> int:
     return spec_id
 
 
-def _write_commit_manifests(
-    table_path: str,
-    meta: dict,
-    snap: dict,
-    snapshot_id: int,
-    seq_num: int,
-    active_entries_fn=None,
-    active_deletes_fn=None,
-) -> str:
-    """Write this commit's Avro manifest(s) + manifest list; returns the
-    manifest-list path. Appends carry the previous list forward with one
-    new manifest (iceberg_storage.rs:1087-1110); removal commits rewrite
-    one full manifest of the survivors plus DELETED tombstones."""
+def _data_manifest(mdir: str, meta: dict, entries, snapshot_id: int, seq_num: int) -> dict:
+    """One Avro data manifest of (status, entry) pairs bound to the
+    current schema and partition spec."""
     from zombi_spark.table import manifests as MF
 
-    mdir = metadata_dir(table_path)
-    field_ids = _field_ids(meta)
-    pfields = _avro_partition_fields(meta)
     schema_id = meta["current-schema-id"]
     spec_id = meta["default-spec-id"]
-    schema_json = json.dumps(meta["schemas"][schema_id])
-    spec_json = json.dumps(meta["partition-specs"][spec_id]["fields"])
+    return MF.write_manifest(
+        mdir, entries, snapshot_id, seq_num, _field_ids(meta),
+        _avro_partition_fields(meta), json.dumps(meta["schemas"][schema_id]),
+        json.dumps(meta["partition-specs"][spec_id]["fields"]),
+        schema_id=schema_id, spec_id=spec_id, field_types=_field_types(meta),
+    )
+
+
+def _delete_manifest(
+    mdir: str, meta: dict, dels: list[dict], snapshot_id: int, seq_num: int, added=()
+) -> dict:
+    """One Avro DELETE manifest of the active position-delete files."""
+    from zombi_spark.table import manifests as MF
+
+    return MF.write_delete_manifest(
+        mdir, dels, snapshot_id, seq_num,
+        json.dumps(meta["schemas"][meta["current-schema-id"]]),
+        added_paths={d["file_path"] for d in added},
+        spec_id=_ensure_unpartitioned_spec(meta),
+    )
+
+
+def _write_commit_manifests(table, meta: dict, snap: dict, sid: int, prev: dict | None) -> str:
+    """Write log version ``snap``'s Avro manifest(s) + manifest list;
+    returns the list path. ``prev`` is the Iceberg snapshot of the parent
+    version, or None when the metadata has none. Appends carry the
+    previous list forward with one new manifest
+    (iceberg_storage.rs:1087-1110); removal commits, and versions with no
+    previous list, write one full manifest of the survivors plus DELETED
+    tombstones."""
+    from zombi_spark.table import manifests as MF
+
+    mdir = metadata_dir(table.path)
+    version = snap["version"]
+    seq_num = version + 1
     added = [_norm_entry(e) for e in snap.get("added", [])]
-    removed = list(snap.get("removed", []))
-
-    prev_list = None
-    if meta["current-snapshot-id"] != -1:
-        prev = next(
-            (s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]),
-            None,
-        )
-        if prev is not None:
-            p = prev.get("manifest-list", "")
-            if p.endswith(".avro") and os.path.isfile(p):
-                prev_list = p
-
-    first_commit = meta["current-snapshot-id"] == -1 and not meta["snapshots"]
-    if (prev_list is not None or first_commit) and not removed:
-        mf = MF.write_manifest(
-            mdir,
-            [(MF.ADDED, e) for e in added],
-            snapshot_id,
-            seq_num,
-            field_ids,
-            pfields,
-            schema_json,
-            spec_json,
-            schema_id=schema_id,
-            spec_id=spec_id,
-            field_types=_field_types(meta),
-        )
+    removed = snap.get("removed", [])
+    prev_list = prev["manifest-list"] if prev is not None else ""
+    if not removed and prev_list.endswith(".avro") and os.path.isfile(prev_list):
         # carry DATA manifests only: the delete-manifest set is
         # regenerated in full each commit (O(active delete files) — tiny)
-        prior = (
-            [m for m in MF.read_manifest_list(prev_list) if m.get("content", 0) == 0]
-            if prev_list
-            else []
-        )
+        prior = [m for m in MF.read_manifest_list(prev_list) if m.get("content", 0) == 0]
+        mf = _data_manifest(mdir, meta, [(MF.ADDED, e) for e in added], sid, seq_num)
         manifest_files = prior + [mf]
     else:
-        # removal commit, or no usable previous Avro list (legacy table):
-        # one full manifest of the active set + tombstones
-        active = (
-            [_norm_entry(e) for e in active_entries_fn()]
-            if active_entries_fn is not None
-            else added
-        )
         added_paths = {e["file_path"] for e in added}
         entries = [
-            (MF.ADDED if e["file_path"] in added_paths else MF.EXISTING, e) for e in active
+            (MF.ADDED if e["file_path"] in added_paths else MF.EXISTING, e)
+            for e in table._active_files(version)
         ]
-        data_root = os.path.join(table_path, "data")
-        # tombstones carry the removed files' REAL stats (from the prior
-        # manifest chain): without them deleted_rows_count and the
-        # tombstone data_file record_count read as 0 to every external
-        # consumer — a removal commit that "removed nothing"
-        removed_set = set(removed)
-        removed_stats: dict[str, dict] = {}
-        if prev_list is not None and removed_set:
-            try:
-                for mf_rec in MF.read_manifest_list(prev_list):
-                    for pe in MF.read_manifest_entries(mf_rec["manifest_path"]):
-                        dfile = pe.get("data_file") or {}
-                        fp = dfile.get("file_path")
-                        if fp in removed_set and pe.get("status") != MF.DELETED:
-                            removed_stats[fp] = {
-                                "row_count": dfile.get("record_count", 0),
-                                "file_size_bytes": dfile.get("file_size_in_bytes", 0),
-                            }
-            except Exception:
-                removed_stats = {}  # stats are best-effort; never block a commit
+        # tombstones carry the removed files' real row/byte counts from
+        # the parent's log entries: without them deleted_rows_count reads
+        # 0 to every external consumer — a removal that "removed nothing".
+        # A parent the metadata lacks may have expired from the log, so
+        # its tombstones go without counts.
+        parent = (
+            {e["file_path"]: e for e in table._active_files(version - 1)}
+            if removed and prev is not None
+            else {}
+        )
         for p in removed:
-            entries.append(
-                (
-                    MF.DELETED,
-                    {
-                        "file_path": p,
-                        "partition_dir": os.path.relpath(os.path.dirname(p), data_root),
-                        **removed_stats.get(p, {}),
-                    },
-                )
-            )
-        mf = MF.write_manifest(
-            mdir, entries, snapshot_id, seq_num, field_ids, pfields,
-            schema_json, spec_json, schema_id=schema_id, spec_id=spec_id,
-            field_types=_field_types(meta),
-        )
-        manifest_files = [mf]
-    dels = list(active_deletes_fn()) if active_deletes_fn is not None else []
+            stats = parent.get(p, {})
+            entries.append((MF.DELETED, {
+                "file_path": p,
+                "partition_dir": os.path.relpath(os.path.dirname(p), table.data_path),
+                **{k: stats[k] for k in ("row_count", "file_size_bytes") if k in stats},
+            }))
+        manifest_files = [_data_manifest(mdir, meta, entries, sid, seq_num)]
+    dels = table._active_delete_files(version)
     if dels:
-        del_spec_id = _ensure_unpartitioned_spec(meta)
-        added_del = {d["file_path"] for d in snap.get("added_deletes", [])}
         manifest_files.append(
-            MF.write_delete_manifest(
-                mdir, dels, snapshot_id, seq_num, schema_json,
-                added_paths=added_del, spec_id=del_spec_id,
-            )
+            _delete_manifest(mdir, meta, dels, sid, seq_num, snap.get("added_deletes", []))
         )
-    return MF.write_manifest_list(mdir, snapshot_id, manifest_files)
+    return MF.write_manifest_list(mdir, sid, manifest_files)
 
 
-def write_metadata_for_commit(
-    table_path: str,
-    table_name: str,
-    snap: dict,
-    spark_schema=None,
-    active_entries_fn=None,
-    active_deletes_fn=None,
-    backend=None,
-) -> str:
-    """Extend the table's Iceberg metadata with one committed snapshot and
-    write ``v{version+1}.metadata.json`` (+ version-hint). Returns the path.
-
-    ``snap`` is the EventTable snapshot dict just committed (version,
-    snapshot_id, parent_version, committed_at_ms, operation, added/removed).
-    ``spark_schema`` is the table's CURRENT Spark schema: extraction
-    tables advertise their real columns, and a widened schema appends a
-    new schema entry (column-add evolution, ids preserved).
-    ``active_entries_fn`` lazily yields the active file entries as of this
-    commit — consulted only when a full manifest rewrite is needed
-    (removal commits, or recovery from a missing previous Avro list).
-    """
-    meta = current_metadata(table_path) or _fresh_metadata(
-        table_path, table_name, spark_schema
-    )
-    if spark_schema is not None:
-        _evolve_schema(meta, spark_schema)
-    mdir = metadata_dir(table_path)
-    os.makedirs(mdir, exist_ok=True)
-
-    version = snap["version"]
-    # Lost-write detection must survive snapshot expiration: versions are
-    # monotonic but the snapshot LIST is pruned by expire, so compare the
-    # committing version against the last committed version recorded in a
-    # table property — not against len(snapshots). (Legacy metadata
-    # without the property falls back to the list length, which is exact
-    # for never-expired tables.)
-    props = meta.setdefault("properties", {})
-    if "zombi.last-version" in props:
-        expected = int(props["zombi.last-version"]) + 1
-    else:
-        expected = len(meta["snapshots"])
-    if version != expected:
-        # a prior metadata write was lost (crash/failure between snapshot
-        # commit and metadata write): the metadata no longer mirrors the
-        # log. Signal the caller to rebuild from the full snapshot log
-        # instead of silently appending over the gap.
-        raise RuntimeError(
-            f"iceberg metadata out of sync: expected version {expected}, "
-            f"committing version {version} — rebuild required"
-        )
-    props["zombi.last-version"] = str(version)
+def _append_snapshot(table, meta: dict, snap: dict) -> None:
+    """Add log version ``snap`` to ``meta`` as its new current snapshot."""
     sid = snapshot_id_long(snap["snapshot_id"])
-    parent_hex = snap.get("parent_snapshot_hex")
-    manifest_list = _write_commit_manifests(
-        table_path, meta, snap, sid, version + 1, active_entries_fn,
-        active_deletes_fn,
+    prev = next(
+        (s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]),
+        None,
     )
-    ice_snap = {
+    ice = {
         "snapshot-id": sid,
-        "sequence-number": version + 1,
+        "sequence-number": snap["version"] + 1,
         "timestamp-ms": snap["committed_at_ms"],
-        "manifest-list": manifest_list,
+        "manifest-list": _write_commit_manifests(table, meta, snap, sid, prev),
         "summary": {
             "operation": {"append": "append", "retention-delete": "delete"}.get(
                 snap.get("operation"), "replace"
@@ -519,140 +413,72 @@ def write_metadata_for_commit(
         # after column-add evolution that is the evolved entry, not 0
         "schema-id": meta["current-schema-id"],
     }
-    if meta["current-snapshot-id"] != -1 and parent_hex is not None:
-        ice_snap["parent-snapshot-id"] = snapshot_id_long(parent_hex)
-
-    _append_metadata_log(mdir, meta)
-    meta["snapshots"].append(ice_snap)
-    meta["snapshot-log"] = (
-        meta.get("snapshot-log", [])
-        + [{"timestamp-ms": snap["committed_at_ms"], "snapshot-id": sid}]
-    )[-100:]
+    if prev is not None:
+        ice["parent-snapshot-id"] = prev["snapshot-id"]
+    meta["snapshots"].append(ice)
+    meta["snapshot-log"].append({"timestamp-ms": snap["committed_at_ms"], "snapshot-id": sid})
     meta["current-snapshot-id"] = sid
-    meta["last-sequence-number"] = version + 1
+    meta["last-sequence-number"] = snap["version"] + 1
     meta["last-updated-ms"] = snap["committed_at_ms"]
-    return _write_next_metadata(mdir, meta, backend)
 
 
-def rebuild_metadata(
-    table_path: str, table_name: str, snapshots: list[dict], spark_schema=None, backend=None
-) -> str:
-    """Regenerate the Iceberg metadata from the authoritative snapshot
-    log (recovery path for a lost/failed metadata write): one fresh
-    metadata carrying every live snapshot, written as the next version.
+def write_metadata_for_commit(table, snap: dict) -> str | None:
+    """Bring ``table``'s Iceberg metadata up to log version ``snap`` (a
+    snapshot dict of the table, normally the one just committed) and
+    write the next ``v{N}.metadata.json`` + version-hint. Returns its
+    path, or None when there was nothing to add or drop.
 
-    Iceberg requires a STABLE table-uuid across the table's whole life —
-    clients validating uuid continuity reject a table whose uuid changes
-    — so a rebuild adopts the prior metadata's uuid when one exists and
-    mints a fresh one only for a genuinely new table. The prior SCHEMA
-    HISTORY and each snapshot's commit-time schema-id are carried over
-    the same way (the engine's own snapshot log doesn't record schema
-    evolution points, so without the prior metadata a rebuild can only
-    resolve every snapshot against the current schema — documented
-    information loss in the corrupt-prior case)."""
-    meta = _fresh_metadata(table_path, table_name, spark_schema)
-    try:
-        prior = current_metadata(table_path)
-    except Exception:
-        prior = None  # corrupt prior metadata: rebuild proceeds fresh
-    prior_schema_ids: dict[int, int] = {}
-    if prior is not None:
-        if prior.get("table-uuid"):
-            meta["table-uuid"] = prior["table-uuid"]
-        # keep the evolution history: prior schemas superset the fresh
-        # single-entry list whenever the table evolved — then RE-EVOLVE
-        # against the current Spark schema, because the lost write may
-        # have been exactly the commit that added a column (the prior
-        # file predates it; without this the rebuilt current schema
-        # would silently drop the new column the data files carry)
-        if len(prior.get("schemas", [])) > len(meta["schemas"]):
-            meta["schemas"] = prior["schemas"]
-            meta["current-schema-id"] = prior["current-schema-id"]
-            meta["last-column-id"] = prior["last-column-id"]
-            if spark_schema is not None:
-                _evolve_schema(meta, spark_schema)
-        prior_schema_ids = {
-            s["snapshot-id"]: s.get("schema-id", 0) for s in prior.get("snapshots", [])
-        }
-    mdir = metadata_dir(table_path)
-    os.makedirs(mdir, exist_ok=True)
-    from zombi_spark.table import manifests as MF
-
-    field_ids = _field_ids(meta)
-    pfields = _avro_partition_fields(meta)
-    schema_json = json.dumps(meta["schemas"][meta["current-schema-id"]])
-    spec_json = json.dumps(meta["partition-specs"][meta["default-spec-id"]]["fields"])
-    prev_sid = None
-    active: dict[str, dict] = {}
-    active_dels: dict[str, dict] = {}
-    for snap in snapshots:
-        sid = snapshot_id_long(snap["snapshot_id"])
-        # replay the log to this snapshot's active set and write ONE full
-        # manifest per snapshot — O(snapshots × files), acceptable for the
-        # rare recovery path (expire_snapshots bounds the log)
-        if "files" in snap:
-            active = {_norm_entry(e)["file_path"]: _norm_entry(e) for e in snap["files"]}
-            active_dels = {e["file_path"]: e for e in snap.get("delete_files", [])}
-        else:
-            for p in snap.get("removed", []):
-                active.pop(p, None)
-            for e in snap.get("added", []):
-                e = _norm_entry(e)
-                active[e["file_path"]] = e
-            for p in snap.get("removed_deletes", []):
-                active_dels.pop(p, None)
-            for e in snap.get("added_deletes", []):
-                active_dels[e["file_path"]] = e
-        added_paths = {_norm_entry(e)["file_path"] for e in snap.get("added", [])}
-        entries = [
-            (MF.ADDED if path in added_paths else MF.EXISTING, e)
-            for path, e in sorted(active.items())
+    ``table`` is the :class:`EventTable` whose snapshot log this mirrors:
+    the writer uses its path, name, commit backend, current Spark schema
+    (extraction tables advertise their real columns; a widened schema
+    appends a new schema entry, ids preserved) and its manifest replay
+    (``_active_files`` / ``_active_delete_files``, cached per version).
+    """
+    spark_schema = table.table_schema()
+    meta = current_metadata(table.path) or _fresh_metadata(
+        table.path, table.name, spark_schema
+    )
+    props = meta["properties"]
+    # metadata written before the cursor existed mirrors a never-expired log
+    cursor = int(props.get("zombi.last-version", len(meta["snapshots"]) - 1))
+    version = snap["version"]
+    todo = [snap] if version > cursor else []
+    if version > cursor + 1:
+        # earlier writes were lost or failed: catch up the versions between
+        todo[:0] = [
+            table._read_snapshot(n)
+            for n in table._snapshot_files()
+            if cursor < int(n[5:13]) < version
         ]
-        mf = MF.write_manifest(
-            mdir, entries, sid, snap["version"] + 1, field_ids, pfields,
-            schema_json, spec_json, field_types=_field_types(meta),
-        )
-        mfs = [mf]
-        if active_dels:
-            del_spec_id = _ensure_unpartitioned_spec(meta)
-            added_del = {d["file_path"] for d in snap.get("added_deletes", [])}
-            mfs.append(
-                MF.write_delete_manifest(
-                    mdir, list(active_dels.values()), sid, snap["version"] + 1,
-                    schema_json, added_paths=added_del, spec_id=del_spec_id,
-                )
-            )
-        mlist = MF.write_manifest_list(mdir, sid, mfs)
-        ice = {
-            "snapshot-id": sid,
-            "sequence-number": snap["version"] + 1,
-            "timestamp-ms": snap["committed_at_ms"],
-            "manifest-list": mlist,
-            "summary": {
-                "operation": {"append": "append", "retention-delete": "delete"}.get(
-                snap.get("operation"), "replace"
-            ),
-                "added-data-files": str(len(snap.get("added", []))),
-                "removed-data-files": str(len(snap.get("removed", []))),
-            },
-            # commit-time schema-id recovered from the prior metadata
-            # when it survives; current schema otherwise (see docstring)
-            "schema-id": prior_schema_ids.get(sid, meta["current-schema-id"]),
-        }
-        if prev_sid is not None:
-            ice["parent-snapshot-id"] = prev_sid
-        meta["snapshots"].append(ice)
-        meta["snapshot-log"].append(
-            {"timestamp-ms": snap["committed_at_ms"], "snapshot-id": sid}
-        )
-        meta["current-snapshot-id"] = sid
-        meta["last-sequence-number"] = snap["version"] + 1
-        meta["last-updated-ms"] = snap["committed_at_ms"]
-        meta["properties"]["zombi.last-version"] = str(snap["version"])
-        prev_sid = sid
-    meta["snapshot-log"] = meta["snapshot-log"][-100:]
+    # the log expires oldest first, so expired snapshots form a prefix
+    expired = []
+    while meta["snapshots"]:
+        v = meta["snapshots"][0]["sequence-number"] - 1
+        if os.path.isfile(os.path.join(table.meta_path, f"snap-{v:08d}.json")):
+            break
+        expired.append(meta["snapshots"].pop(0))
+    if not todo and not expired:
+        return None
 
-    return _write_next_metadata(mdir, meta, backend)
+    mdir = metadata_dir(table.path)
+    os.makedirs(mdir, exist_ok=True)
+    _evolve_schema(meta, spark_schema)
+    _append_metadata_log(mdir, meta)
+    for s in todo:
+        _append_snapshot(table, meta, s)
+    if todo:
+        props["zombi.last-version"] = str(version)
+    else:
+        meta["last-updated-ms"] = int(time.time() * 1000)
+    live = {s["snapshot-id"] for s in meta["snapshots"]}
+    meta["snapshot-log"] = [e for e in meta["snapshot-log"] if e["snapshot-id"] in live][-100:]
+    out = _write_next_metadata(mdir, meta, table.backend)
+    if expired:
+        # Iceberg's expire_snapshots cleanup: the expired snapshots' Avro
+        # files are provably ours to reclaim unless a live one shares them
+        refs = _referenced_avro({"snapshots": expired})
+        _gc_unreferenced_metadata(mdir, meta, out, prior_refs=refs)
+    return out
 
 
 def _referenced_avro(meta: dict) -> set[str]:
@@ -743,89 +569,39 @@ def _gc_unreferenced_metadata(
     return removed
 
 
-def rewrite_manifests(
-    table_path: str,
-    active_entries: list[dict],
-    backend=None,
-    active_deletes: list[dict] | None = None,
-) -> str:
+def rewrite_manifests(table) -> str:
     """Iceberg's ``rewrite_manifests`` action, metadata-only: merge the
     CURRENT snapshot's carry-forward manifest list into ONE full manifest
-    of the active files (all EXISTING, no data touched), bump the
+    of its active files (all EXISTING, no data touched), bump the
     metadata version, and GC the now-unreferenced manifests. Bounds the
     list length for append-only tables between compactions (compaction
     resets the list as a side effect; this does it without rewriting a
-    byte of data). Simplification vs strict Iceberg: existing entries
-    take the current snapshot's sequence number rather than their
-    original data sequence numbers (we don't track per-file commit
-    provenance in the active-file entries; no reader here consumes
-    them). Returns the new metadata path."""
+    byte of data). The active files are those of the log version the
+    current snapshot mirrors, so a metadata that lags the log stays
+    consistent for the writer's next catch-up. Simplification vs strict
+    Iceberg: existing entries take the current snapshot's sequence number
+    rather than their original data sequence numbers (we don't track
+    per-file commit provenance in the active-file entries; no reader here
+    consumes them). Returns the new metadata path."""
     from zombi_spark.table import manifests as MF
 
-    meta = current_metadata(table_path)
+    meta = current_metadata(table.path)
     if meta is None or meta["current-snapshot-id"] == -1:
         raise ValueError("no current snapshot to rewrite manifests for")
     cur = next(
         s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
     )
-    mdir = metadata_dir(table_path)
+    sid, seq_num = cur["snapshot-id"], cur["sequence-number"]
+    mdir = metadata_dir(table.path)
     prior_refs = _referenced_avro(meta)
-    mf = MF.write_manifest(
-        mdir,
-        [(MF.EXISTING, _norm_entry(e)) for e in active_entries],
-        cur["snapshot-id"],
-        cur["sequence-number"],
-        _field_ids(meta),
-        _avro_partition_fields(meta),
-        json.dumps(meta["schemas"][meta["current-schema-id"]]),
-        json.dumps(meta["partition-specs"][meta["default-spec-id"]]["fields"]),
-        schema_id=meta["current-schema-id"],
-        spec_id=meta["default-spec-id"],
-        field_types=_field_types(meta),
-    )
-    mfs = [mf]
-    if active_deletes:
-        mfs.append(
-            MF.write_delete_manifest(
-                mdir,
-                list(active_deletes),
-                cur["snapshot-id"],
-                cur["sequence-number"],
-                json.dumps(meta["schemas"][meta["current-schema-id"]]),
-                spec_id=_ensure_unpartitioned_spec(meta),
-            )
-        )
-    cur["manifest-list"] = MF.write_manifest_list(mdir, cur["snapshot-id"], mfs)
+    entries = [(MF.EXISTING, e) for e in table._active_files(seq_num - 1)]
+    mfs = [_data_manifest(mdir, meta, entries, sid, seq_num)]
+    dels = table._active_delete_files(seq_num - 1)
+    if dels:
+        mfs.append(_delete_manifest(mdir, meta, dels, sid, seq_num))
+    cur["manifest-list"] = MF.write_manifest_list(mdir, sid, mfs)
     _append_metadata_log(mdir, meta)
     meta["last-updated-ms"] = int(time.time() * 1000)
-    out = _write_next_metadata(mdir, meta, backend)
-    _gc_unreferenced_metadata(mdir, meta, out, prior_refs=prior_refs)
-    return out
-
-
-def rewrite_after_expire(table_path: str, table_name: str, live_snaps: list[dict], backend=None) -> str:
-    """After snapshot expiration, rewrite metadata keeping only live
-    snapshots, then garbage-collect manifests and metadata JSON only
-    expired snapshots referenced (Iceberg's expire_snapshots does both)."""
-    meta = current_metadata(table_path)
-    if meta is None:
-        raise FileNotFoundError("no Iceberg metadata to rewrite")
-    prior_refs = _referenced_avro(meta)  # BEFORE pruning the snapshot list
-    live_ids = {snapshot_id_long(s["snapshot_id"]) for s in live_snaps}
-    meta["snapshots"] = [s for s in meta["snapshots"] if s["snapshot-id"] in live_ids]
-    meta["snapshot-log"] = [e for e in meta["snapshot-log"] if e["snapshot-id"] in live_ids]
-    now = int(time.time() * 1000)
-    meta["last-updated-ms"] = now
-    if live_snaps:
-        # versions stay monotonic across expiration; record the last one
-        # so the commit-time lost-write check keeps working after the
-        # snapshot list is pruned (legacy metadata gains the property here)
-        meta.setdefault("properties", {})["zombi.last-version"] = str(
-            max(s["version"] for s in live_snaps)
-        )
-
-    mdir = metadata_dir(table_path)
-    _append_metadata_log(mdir, meta)
-    out = _write_next_metadata(mdir, meta, backend)
+    out = _write_next_metadata(mdir, meta, table.backend)
     _gc_unreferenced_metadata(mdir, meta, out, prior_refs=prior_refs)
     return out
