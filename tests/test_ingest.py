@@ -304,21 +304,21 @@ def test_orphan_staging_files_from_failed_attempts_are_not_promoted(spark, tmp_p
 
 
 def test_all_null_write_time_stats_drop_to_no_stats_contract(spark, tmp_path):
-    """VERDICT r8 #5 regression pin for the Arrow-staging None-stats drop
-    (event_table.py _move_staged_in): pyarrow's ``min_max`` on an
-    all-null slice yields ``(None, None)``, and the planners compare
-    manifest bounds WITHOUT null guards — the write-time stats dict must
-    DROP None-valued min_/max_ keys so such a file lands in the
-    never-skippable no-stats set, exactly like the JVM footer path's
-    omitted keys. (End-to-end, ``append`` cannot produce this shape:
-    the arrow route's non-nullable schema cast rejects all-null
-    timestamps upstream — so this drives ``_move_staged_in`` with the
-    stats dict the writer WOULD emit, which is the code the r8 fix
-    changed.)"""
+    """VERDICT r8 #5 regression pin, now for the single stats builder:
+    a staged file whose ``timestamp_ms`` is entirely null gets NO
+    min_ts/max_ts keys (the planners compare manifest bounds WITHOUT
+    null guards), so it lands in the never-skippable no-stats set.
+    (End-to-end, ``append`` cannot produce this shape: the arrow route's
+    non-nullable schema cast rejects all-null timestamps upstream — so
+    this builds the staged file's report with ``_parquet_file_entry``,
+    as an Arrow writing task does, and promotes it through
+    ``_move_staged_in``.)"""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from zombi_spark.table.event_table import _parquet_file_entry
 
     t = EventTable(spark, str(tmp_path), "nullstats")
     # one normally-appended batch so the table has healthy entries too
@@ -342,25 +342,9 @@ def test_all_null_write_time_stats_drop_to_no_stats_contract(spark, tmp_path):
     )
     fname = "part-nullts.parquet"
     pq.write_table(body, os.path.join(staging, rel_dir, fname), compression="zstd")
-    # exactly what _stage_arrow's min_max emits for the all-null slice
-    wstats = {
-        os.path.join(rel_dir, fname): {
-            "rel": os.path.join(rel_dir, fname),
-            "row_count": 2,
-            "file_size_bytes": os.path.getsize(
-                os.path.join(staging, rel_dir, fname)
-            ),
-            "min_ts": None,
-            "max_ts": None,
-            "min_seq": 3,
-            "max_seq": 4,
-            "min_topic": "t",
-            "max_topic": "t",
-            "min_part": 0,
-            "max_part": 0,
-            "key_nulls": 2,
-        }
-    }
+    # exactly what an Arrow writing task reports for the staged file
+    rel = os.path.join(rel_dir, fname)
+    wstats = {rel: _parquet_file_entry(os.path.join(staging, rel), staging)}
     added = t._move_staged_in(staging, prefix="", stats=wstats)
     assert len(added) == 1
     entry = added[0]

@@ -529,3 +529,87 @@ def test_scan_files_topic_partition_pruning(spark, tmp_path):
     # a value no file admits plans zero files
     assert t.scan_files(topic="zzz") == []
     assert t.read(topic="zzz").count() == 0
+
+
+def _synthetic_entry(i: int) -> dict:
+    hour = i % 24
+    return {
+        "file_path": f"/nowhere/data/event_date=2024-01-01/event_hour={hour}/f{i}.parquet",
+        "partition_dir": f"event_date=2024-01-01/event_hour={hour}",
+        "file_size_bytes": 1000 + i,
+        "row_count": 10,
+        "min_ts": 1704067200000 + i * 1000,
+        "max_ts": 1704067200000 + i * 1000 + 999,
+    }
+
+
+def test_manifest_replay_reads_one_snapshot_per_commit(tmp_path, monkeypatch):
+    """The manifest replay stops at the nearest cached version: across 40
+    commits (one removal, one position-delete add/remove pair, one rebase
+    at v32) no commit after v0 reads more than 3 snapshot files, and every
+    version replays to the same (files, delete files) as a cold table."""
+    t = EventTable(None, str(tmp_path), "t")
+    reads = []
+    real_read = t._read_snapshot
+
+    def spy(fname):
+        reads.append(fname)
+        return real_read(fname)
+
+    monkeypatch.setattr(t, "_read_snapshot", spy)
+    dele = {
+        "file_path": "/nowhere/deletes/d0.parquet",
+        "row_count": 1,
+        "file_size_bytes": 100,
+        "referenced_files": [_synthetic_entry(3)["file_path"]],
+    }
+    per_commit = []
+    for v in range(40):
+        kwargs = {"added": [_synthetic_entry(v)]}
+        if v == 10:
+            kwargs["removed"] = [_synthetic_entry(2)["file_path"]]
+        if v == 12:
+            kwargs["added_deletes"] = [dele]
+        if v == 20:
+            kwargs["removed_deletes"] = [dele["file_path"]]
+        before = len(reads)
+        t._commit_snapshot(
+            {"operation": "append"}, expected_parent=t.latest_version(), **kwargs
+        )
+        per_commit.append(len(reads) - before)
+    assert max(per_commit[1:]) <= 3, per_commit
+
+    cold = EventTable(None, str(tmp_path), "t")
+    for v in range(40):
+        assert t._active_files(v) == cold._active_files(v), v
+        assert t._active_delete_files(v) == cold._active_delete_files(v), v
+    live = {e["file_path"] for e in cold._active_files(39)}
+    assert _synthetic_entry(2)["file_path"] not in live and len(live) == 39
+    assert cold._active_delete_files(15) == [dele]
+    assert cold._active_delete_files(39) == []
+
+
+def test_unreadable_footer_keeps_size_and_logs(tmp_path, caplog):
+    """Stats are optional, but losing them is reported: a truncated
+    parquet file yields an entry with its size and no row count or
+    bounds, and one warning."""
+    import logging
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from zombi_spark.table.event_table import _parquet_file_entry
+
+    d = tmp_path / "data" / "event_date=2024-01-01" / "event_hour=0"
+    d.mkdir(parents=True)
+    p = str(d / "f.parquet")
+    pq.write_table(pa.table({"timestamp_ms": pa.array([1, 2], pa.int64())}), p)
+    with open(p, "rb") as fh:
+        head = fh.read()[:20]
+    with open(p, "wb") as fh:
+        fh.write(head)
+    with caplog.at_level(logging.WARNING, logger="zombi_spark.table.event_table"):
+        entry = _parquet_file_entry(p, str(tmp_path / "data"))
+    assert entry["file_size_bytes"] == 20
+    assert "row_count" not in entry and "min_ts" not in entry
+    assert len([r for r in caplog.records if r.levelno == logging.WARNING]) == 1

@@ -11,11 +11,11 @@ gives any Spark user
   batch scan (time travel via ``.option("version", N)``) whose file set
   comes from the committed manifest, never a directory listing, with
   Iceberg-style file skipping driven by *pushed filters*
-  (``DataSourceReader.pushFilters``): predicates on ``timestamp_ms`` /
-  ``sequence`` / ``topic`` / ``partition`` prune by the per-file bounds
-  the manifest records (event_table._parquet_file_entry), predicates on
-  the hive partition columns ``event_date`` / ``event_hour`` prune by the
-  directory values. Pruning is an *optimization, never a correctness
+  (``DataSourceReader.pushFilters``): the pushed filters become
+  constraints for ``event_table._entry_admits``, the one file-pruning
+  predicate the table's own planners use too — over the per-file bounds
+  and null counts ``event_table._parquet_file_entry`` records and the
+  hive directory values. Pruning is an *optimization, never a correctness
   gate*: every filter is returned to Spark as unhandled, so Spark
   re-applies it row-level (file bounds admit a value; only rows prove
   it) and a file with no stats is scanned, not skipped. Column
@@ -78,44 +78,25 @@ as with Iceberg's incremental scans.
 
 from __future__ import annotations
 
-import datetime
-import math
+import logging
 import os
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    EqualNullSafe,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
-    StringStartsWith,
 )
 from pyspark.sql.types import StructType
 
+from zombi_spark.table.event_table import (
+    _entry_admits,
+    _filter_constraints,
+    _hive_values,
+)
+
 FORMAT_NAME = "zombi"
-
-# manifest stat keys per filterable data column (event_table._parquet_file_entry)
-_BOUND_KEYS = {
-    "timestamp_ms": ("min_ts", "max_ts"),
-    "sequence": ("min_seq", "max_seq"),
-    "topic": ("min_topic", "max_topic"),
-    "partition": ("min_part", "max_part"),
-}
-_HIVE_RE = {
-    "event_date": re.compile(r"event_date=([0-9]{4}-[0-9]{2}-[0-9]{2})(?:/|$)"),
-    "event_hour": re.compile(r"event_hour=([0-9]+)(?:/|$)"),
-}
-
 
 def _resolve_path(options: dict) -> str:
     """The table directory: ``.load("<root>/<name>")``, or addressed BY
@@ -188,201 +169,6 @@ def _table_for(path: str):
     return EventTable(None, os.path.dirname(path) or ".", os.path.basename(path))
 
 
-def _hive_values(entry: dict) -> dict:
-    """Typed event_date/event_hour from the entry's directory layout.
-
-    Prefers the recorded ``partition_dir``; falls back to matching the
-    file path (legacy bare-path manifest entries). Missing ⇒ absent key
-    (the file is then never pruned on that column and the column reads
-    as NULL — stats are optional, correctness is not).
-    """
-    probe = entry.get("partition_dir") or entry.get("file_path", "")
-    out: dict = {}
-    m = _HIVE_RE["event_date"].search(probe)
-    if m:
-        out["event_date"] = datetime.date.fromisoformat(m.group(1))
-    m = _HIVE_RE["event_hour"].search(probe)
-    if m:
-        out["event_hour"] = int(m.group(1))
-    return out
-
-
-def _filter_constraints(filters) -> list:
-    """The prunable constraints among the pushed filters.
-
-    A constraint is ``(column, op, value)`` with op ∈ {"==", ">", ">=",
-    "<", "<=", "in", "startswith", "isnull", "notnull"}. Unsupported
-    shapes (nested paths, Not, contains/endswith) are simply not
-    constraints — the file is kept and Spark's row-level re-apply does
-    the work. Columns beyond the system set are kept too: extraction
-    tables record per-file ``col_stats`` bounds and ``col_nulls``
-    counts for extracted int/string/float/bool columns (event_table.
-    _parquet_file_entry), and :func:`_entry_admits` prunes on whichever
-    source an entry carries.
-    """
-    constraints = []
-    for f in filters:
-        attr = getattr(f, "attribute", None)
-        if not attr or len(attr) != 1:
-            continue
-        col = attr[0]
-        if isinstance(f, (EqualTo, EqualNullSafe)):
-            if f.value is not None:
-                constraints.append((col, "==", f.value))
-            elif isinstance(f, EqualNullSafe):
-                # col <=> NULL is exactly IS NULL (an EqualTo with a
-                # null literal never reaches pushdown — Spark folds it)
-                constraints.append((col, "isnull", None))
-        elif isinstance(f, GreaterThan):
-            constraints.append((col, ">", f.value))
-        elif isinstance(f, GreaterThanOrEqual):
-            constraints.append((col, ">=", f.value))
-        elif isinstance(f, LessThan):
-            constraints.append((col, "<", f.value))
-        elif isinstance(f, LessThanOrEqual):
-            constraints.append((col, "<=", f.value))
-        elif isinstance(f, In):
-            vals = [v for v in f.value if v is not None]
-            if vals:
-                constraints.append((col, "in", vals))
-        elif isinstance(f, StringStartsWith):
-            if isinstance(f.value, str):
-                constraints.append((col, "startswith", f.value))
-        elif isinstance(f, IsNull):
-            constraints.append((col, "isnull", None))
-        elif isinstance(f, IsNotNull):
-            constraints.append((col, "notnull", None))
-    return constraints
-
-
-def _as_comparable(value, reference):
-    """Coerce a pushed-filter literal to the manifest stat's type.
-
-    Spark hands dates as ``datetime.date`` and ints as ``int`` already;
-    the one mismatch seen in practice is date-vs-string when a user
-    compares event_date to a string literal. A NaN literal is NEVER
-    comparable: col_stats bounds exclude NaN by construction while Spark
-    orders NaN above +inf and matches NaN = NaN, so no bound may prune
-    on it.
-    """
-    if isinstance(value, float) and math.isnan(value):
-        return None
-    if isinstance(reference, datetime.date) and isinstance(value, str):
-        try:
-            return datetime.date.fromisoformat(value)
-        except ValueError:
-            return None
-    if type(value) is type(reference) or isinstance(value, type(reference)):
-        return value
-    if isinstance(reference, (int, float)) and isinstance(value, (int, float)):
-        return value
-    return None  # incomparable — never prune on it
-
-
-def _bounds_admit(lo, hi, op: str, value) -> bool:
-    """Can any row inside ``[lo, hi]`` satisfy ``op value``? ``hi`` may
-    be None — a ONE-SIDED bound (r15: a truncated string upper bound
-    whose increment overflowed): the unknown side never proves
-    exclusion, so operators needing it keep the file."""
-    if op == "startswith":
-        # rows matching lie in [value, increment_string(value)); admit
-        # on range overlap. Sound with truncated bounds: lo ≤ true min
-        # and hi ≥ true max, so a disjoint [lo, hi] proves disjoint data.
-        if not isinstance(value, str) or not isinstance(lo, str):
-            return True
-        if hi is not None and hi < value:
-            return False
-        from zombi_spark.table.event_table import increment_string
-
-        succ = increment_string(value)
-        return succ is None or lo < succ
-    if op == "in":
-        # handled BEFORE the scalar coercion: the value is a LIST, which
-        # _as_comparable (rightly) rejects — routing it there first made
-        # every In() constraint silently never prune (latent since r13,
-        # sound but useless; caught by the r15 string-In planning test)
-        vals = [_as_comparable(v, lo) for v in value]
-        if any(v is None for v in vals):
-            # an incomparable literal (a NaN — which DOES match NaN rows
-            # in Spark — or a type mismatch) means exclusion is unprovable
-            return True
-        return any(lo <= v and (hi is None or v <= hi) for v in vals)
-    value = _as_comparable(value, lo)
-    if value is None:
-        return True
-    if op == "==":
-        return lo <= value and (hi is None or value <= hi)
-    if op == ">":
-        return hi is None or hi > value
-    if op == ">=":
-        return hi is None or hi >= value
-    if op == "<":
-        return lo < value
-    if op == "<=":
-        return lo <= value
-    return True
-
-
-def _entry_admits(entry: dict, constraints: list) -> bool:
-    """Iceberg-style file skipping: drop the file only when a constraint
-    *provably* excludes every row. Missing stats ⇒ keep. Bounds come
-    from three sources, all optional per entry: the fixed system-column
-    keys (_BOUND_KEYS), the hive directory values, and the
-    ``col_stats`` dict of extracted-column bounds. col_stats bounds
-    cover NON-NULL values only — sound for the comparison operators,
-    none of which a NULL row can satisfy; IS NULL / IS NOT NULL prune
-    on the separate ``col_nulls`` exact counts (r15), never on bounds.
-    """
-    hive = _hive_values(entry)
-    col_stats = entry.get("col_stats") or {}
-    col_nulls = entry.get("col_nulls") or {}
-    col_nans = entry.get("col_nans") or {}
-    for col, op, value in constraints:
-        if op in ("isnull", "notnull"):
-            # null-count skipping (r15, Iceberg null_value_counts): a
-            # file proven all-valued excludes IS NULL; a file proven
-            # all-null excludes IS NOT NULL. Hive dir columns are never
-            # null for rows in that dir. Unknown counts ⇒ keep.
-            nulls = col_nulls.get(col)
-            if nulls is None and col == "idempotency_key":
-                nulls = entry.get("key_nulls")
-            if op == "isnull":
-                if nulls == 0 or col in hive:
-                    return False
-            else:
-                rc = entry.get("row_count")
-                if nulls is not None and rc and nulls == rc:
-                    return False
-            continue
-        if col in _BOUND_KEYS:
-            lo_key, hi_key = _BOUND_KEYS[col]
-            if lo_key in entry and hi_key in entry:
-                if not _bounds_admit(entry[lo_key], entry[hi_key], op, value):
-                    return False
-        elif col in hive:
-            v = hive[col]
-            if not _bounds_admit(v, v, op, value):
-                return False
-        elif col in col_stats:
-            lo, hi = col_stats[col]
-            if (
-                op in (">", ">=")
-                and isinstance(lo, float)
-                and col_nans.get(col) != 0
-            ):
-                # float bounds cover non-NaN values; Spark orders NaN
-                # above +inf, so an upper bound proves nothing for >/>=
-                # unless the file is PROVEN NaN-free (col_nans == 0).
-                # Unknown counts (None) keep the file too. The other
-                # operators stay sound: NaN satisfies none of them
-                # against a non-NaN literal (NaN literals never prune —
-                # _as_comparable).
-                continue
-            if not _bounds_admit(lo, hi, op, value):
-                return False
-    return True
-
-
 @dataclass
 class ZombiInputPartition(InputPartition):
     """One scheduled task's worth of data: a list of slices, each
@@ -453,6 +239,9 @@ def _file_slices(entry: dict, hive: dict, max_bytes: int) -> list:
             for g, b in zip(groups, sizes)
         ]
     except Exception:
+        logging.getLogger(__name__).warning(
+            "cannot split %s by row group; reading it whole", path, exc_info=True
+        )
         return whole
 
 

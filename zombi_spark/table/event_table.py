@@ -57,13 +57,17 @@ Scale notes:
 
 from __future__ import annotations
 
+import datetime
 import json
 import logging
+import math
 import os
+import re
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import datasource as ds
 from pyspark.sql import functions as F
 
 from zombi_spark.ingest.batch import EVENT_SCHEMA, validate_table_name
@@ -75,9 +79,8 @@ _DATA_DIR = "data"
 #: The canonical system columns every event table carries. Anything NOT
 #: in this set is a schema-config EXTRACTED column (plus
 #: ``_payload_overflow``, excluded by type at each use site). One
-#: definition, used by the footer stats path, the write-time Arrow stats
-#: path, and the extracted-column schema probes — the three were
-#: hand-duplicated and could drift silently (ADVICE r14).
+#: definition, used by the footer stats builder and the extracted-column
+#: schema probes.
 SYSTEM_COLUMNS = frozenset(
     {
         "sequence", "topic", "partition", "payload",
@@ -168,7 +171,12 @@ def _discovery_threshold(spark: SparkSession, n_files: int):
 def _parquet_file_entry(path: str, data_path: str) -> dict:
     """Per-file manifest entry: size + row count + (ts, seq) bounds read
     from the parquet footer — O(1) metadata reads, no data scan (the
-    DataFile stats Iceberg records at commit, iceberg.rs:126-184)."""
+    DataFile stats Iceberg records at commit, iceberg.rs:126-184).
+
+    The only code that derives entry stats: JVM-written files are read
+    at move time (:meth:`EventTable._move_staged_in`), Arrow-written
+    files inside the task that wrote them (:meth:`EventTable._stage_arrow`).
+    ``partition_dir`` is relative to ``data_path``."""
     import pyarrow.parquet as pq
 
     entry = {
@@ -292,7 +300,9 @@ def _parquet_file_entry(path: str, data_path: str) -> dict:
                     mm = pc.min_max(col)
                     col_stats[name] = [mm["min"].as_py(), mm["max"].as_py()]
                 except Exception:  # noqa: BLE001 — stats stay optional
-                    pass
+                    logging.getLogger(__name__).warning(
+                        "no float stats for column %r of %s", name, path, exc_info=True
+                    )
                 continue
             chunks = [md.row_group(rg).column(i) for rg in range(md.num_row_groups)]
             sts = [c.statistics for c in chunks]
@@ -336,8 +346,223 @@ def _parquet_file_entry(path: str, data_path: str) -> dict:
     except Exception:
         # stats are an optimization — a file with no footer stats is
         # still correct, it just never gets skipped
-        pass
+        logging.getLogger(__name__).warning(
+            "no footer stats for %s", path, exc_info=True
+        )
     return entry
+
+
+# the file-pruning predicate over the entries _parquet_file_entry builds:
+# scan_files, plan_latest_files, expire_data_older_than and the zombi data
+# source's pushed filters all decide "can this file hold a matching row"
+# through _entry_admits. System-column stat keys per filterable column:
+_BOUND_KEYS = {
+    "timestamp_ms": ("min_ts", "max_ts"),
+    "sequence": ("min_seq", "max_seq"),
+    "topic": ("min_topic", "max_topic"),
+    "partition": ("min_part", "max_part"),
+}
+_HIVE_RE = {
+    "event_date": re.compile(r"event_date=([0-9]{4}-[0-9]{2}-[0-9]{2})(?:/|$)"),
+    "event_hour": re.compile(r"event_hour=([0-9]+)(?:/|$)"),
+}
+
+
+def _hive_values(entry: dict) -> dict:
+    """Typed event_date/event_hour from the entry's directory layout.
+
+    Prefers the recorded ``partition_dir``; falls back to matching the
+    file path (legacy bare-path manifest entries). Missing ⇒ absent key
+    (the file is then never pruned on that column and the column reads
+    as NULL — stats are optional, correctness is not).
+    """
+    probe = entry.get("partition_dir") or entry.get("file_path", "")
+    out: dict = {}
+    m = _HIVE_RE["event_date"].search(probe)
+    if m:
+        out["event_date"] = datetime.date.fromisoformat(m.group(1))
+    m = _HIVE_RE["event_hour"].search(probe)
+    if m:
+        out["event_hour"] = int(m.group(1))
+    return out
+
+
+def _filter_constraints(filters) -> list:
+    """The prunable constraints among pushed data-source filters.
+
+    A constraint is ``(column, op, value)`` with op ∈ {"==", ">", ">=",
+    "<", "<=", "in", "startswith", "isnull", "notnull"}. Unsupported
+    shapes (nested paths, Not, contains/endswith) are simply not
+    constraints — the file is kept and Spark's row-level re-apply does
+    the work. Columns beyond the system set are kept too: extraction
+    tables record per-file ``col_stats`` bounds and ``col_nulls``
+    counts for extracted int/string/float/bool columns
+    (:func:`_parquet_file_entry`), and :func:`_entry_admits` prunes on
+    whichever source an entry carries.
+    """
+    constraints = []
+    for f in filters:
+        attr = getattr(f, "attribute", None)
+        if not attr or len(attr) != 1:
+            continue
+        col = attr[0]
+        if isinstance(f, (ds.EqualTo, ds.EqualNullSafe)):
+            if f.value is not None:
+                constraints.append((col, "==", f.value))
+            elif isinstance(f, ds.EqualNullSafe):
+                # col <=> NULL is exactly IS NULL (an EqualTo with a
+                # null literal never reaches pushdown — Spark folds it)
+                constraints.append((col, "isnull", None))
+        elif isinstance(f, ds.GreaterThan):
+            constraints.append((col, ">", f.value))
+        elif isinstance(f, ds.GreaterThanOrEqual):
+            constraints.append((col, ">=", f.value))
+        elif isinstance(f, ds.LessThan):
+            constraints.append((col, "<", f.value))
+        elif isinstance(f, ds.LessThanOrEqual):
+            constraints.append((col, "<=", f.value))
+        elif isinstance(f, ds.In):
+            vals = [v for v in f.value if v is not None]
+            if vals:
+                constraints.append((col, "in", vals))
+        elif isinstance(f, ds.StringStartsWith):
+            if isinstance(f.value, str):
+                constraints.append((col, "startswith", f.value))
+        elif isinstance(f, ds.IsNull):
+            constraints.append((col, "isnull", None))
+        elif isinstance(f, ds.IsNotNull):
+            constraints.append((col, "notnull", None))
+    return constraints
+
+
+def _as_comparable(value, reference):
+    """Coerce a constraint literal to the manifest stat's type.
+
+    Spark hands dates as ``datetime.date`` and ints as ``int`` already;
+    the one mismatch seen in practice is date-vs-string when a user
+    compares event_date to a string literal. A NaN literal is NEVER
+    comparable: col_stats bounds exclude NaN by construction while Spark
+    orders NaN above +inf and matches NaN = NaN, so no bound may prune
+    on it.
+    """
+    if isinstance(value, float) and math.isnan(value):
+        return None
+    if isinstance(reference, datetime.date) and isinstance(value, str):
+        try:
+            return datetime.date.fromisoformat(value)
+        except ValueError:
+            return None
+    if type(value) is type(reference) or isinstance(value, type(reference)):
+        return value
+    if isinstance(reference, (int, float)) and isinstance(value, (int, float)):
+        return value
+    return None  # incomparable — never prune on it
+
+
+def _bounds_admit(lo, hi, op: str, value) -> bool:
+    """Can any row inside ``[lo, hi]`` satisfy ``op value``? ``hi`` may
+    be None — a ONE-SIDED bound (r15: a truncated string upper bound
+    whose increment overflowed): the unknown side never proves
+    exclusion, so operators needing it keep the file."""
+    if op == "startswith":
+        # rows matching lie in [value, increment_string(value)); admit
+        # on range overlap. Sound with truncated bounds: lo ≤ true min
+        # and hi ≥ true max, so a disjoint [lo, hi] proves disjoint data.
+        if not isinstance(value, str) or not isinstance(lo, str):
+            return True
+        if hi is not None and hi < value:
+            return False
+        succ = increment_string(value)
+        return succ is None or lo < succ
+    if op == "in":
+        # handled BEFORE the scalar coercion: the value is a LIST, which
+        # _as_comparable (rightly) rejects — routing it there first made
+        # every In() constraint silently never prune (latent since r13,
+        # sound but useless; caught by the r15 string-In planning test)
+        vals = [_as_comparable(v, lo) for v in value]
+        if any(v is None for v in vals):
+            # an incomparable literal (a NaN — which DOES match NaN rows
+            # in Spark — or a type mismatch) means exclusion is unprovable
+            return True
+        return any(lo <= v and (hi is None or v <= hi) for v in vals)
+    value = _as_comparable(value, lo)
+    if value is None:
+        return True
+    if op == "==":
+        return lo <= value and (hi is None or value <= hi)
+    if op == ">":
+        return hi is None or hi > value
+    if op == ">=":
+        return hi is None or hi >= value
+    if op == "<":
+        return lo < value
+    if op == "<=":
+        return lo <= value
+    return True
+
+
+def _entry_admits(entry: dict, constraints: list) -> bool:
+    """Iceberg-style file skipping: drop the file only when a constraint
+    *provably* excludes every row. Missing stats ⇒ keep. Bounds come
+    from three sources, all optional per entry: the fixed system-column
+    keys (_BOUND_KEYS), the hive directory values, and the
+    ``col_stats`` dict of extracted-column bounds. col_stats bounds
+    cover NON-NULL values only — sound for the comparison operators,
+    none of which a NULL row can satisfy; IS NULL / IS NOT NULL prune
+    on the separate ``col_nulls`` exact counts (r15), never on bounds.
+    """
+    hive = (
+        _hive_values(entry)
+        if any(col in _HIVE_RE for col, _op, _v in constraints)
+        else {}
+    )
+    col_stats = entry.get("col_stats") or {}
+    col_nulls = entry.get("col_nulls") or {}
+    col_nans = entry.get("col_nans") or {}
+    for col, op, value in constraints:
+        if op in ("isnull", "notnull"):
+            # null-count skipping (r15, Iceberg null_value_counts): a
+            # file proven all-valued excludes IS NULL; a file proven
+            # all-null excludes IS NOT NULL. Hive dir columns are never
+            # null for rows in that dir. Unknown counts ⇒ keep.
+            nulls = col_nulls.get(col)
+            if nulls is None and col == "idempotency_key":
+                nulls = entry.get("key_nulls")
+            if op == "isnull":
+                if nulls == 0 or col in hive:
+                    return False
+            else:
+                rc = entry.get("row_count")
+                if nulls is not None and rc and nulls == rc:
+                    return False
+            continue
+        if col in _BOUND_KEYS:
+            lo_key, hi_key = _BOUND_KEYS[col]
+            if lo_key in entry and hi_key in entry:
+                if not _bounds_admit(entry[lo_key], entry[hi_key], op, value):
+                    return False
+        elif col in hive:
+            v = hive[col]
+            if not _bounds_admit(v, v, op, value):
+                return False
+        elif col in col_stats:
+            lo, hi = col_stats[col]
+            if (
+                op in (">", ">=")
+                and isinstance(lo, float)
+                and col_nans.get(col) != 0
+            ):
+                # float bounds cover non-NaN values; Spark orders NaN
+                # above +inf, so an upper bound proves nothing for >/>=
+                # unless the file is PROVEN NaN-free (col_nans == 0).
+                # Unknown counts (None) keep the file too. The other
+                # operators stay sound: NaN satisfies none of them
+                # against a non-NaN literal (NaN literals never prune —
+                # _as_comparable).
+                continue
+            if not _bounds_admit(lo, hi, op, value):
+                return False
+    return True
 
 
 class EventTable:
@@ -374,11 +599,10 @@ class EventTable:
         # default, object-store semantics via ZOMBI_COMMIT_BACKEND or an
         # explicit instance (see table/commit_backend.py)
         self.backend = backend if backend is not None else get_backend()
-        # version -> list[file entry dict]; snapshots are immutable once
-        # committed, so the cache never invalidates
-        self._active_cache: dict[int, list[dict]] = {}
-        # version -> list[position-delete file entry dict] (same immutability)
-        self._active_delete_cache: dict[int, list[dict]] = {}
+        # version -> (file entries, position-delete file entries);
+        # snapshots are immutable once committed, so only expire_snapshots'
+        # rewrite of the survivor base invalidates it
+        self._active_cache: dict[int, tuple[list[dict], list[dict]]] = {}
         if schema_config is not None and schema_config.fields:
             # reject converting a PLAIN table that already holds data:
             # extraction tables drop the payload column from the schema,
@@ -627,17 +851,15 @@ class EventTable:
         if version % _REBASE_EVERY == 0:
             # materialize the full list (manifest-list rebase): replay the
             # parent chain once, apply this delta — O(active files), paid
-            # every _REBASE_EVERY commits
-            parent_files = self._active_files(current) if current is not None else []
+            # every _REBASE_EVERY commits; the base carries the delete
+            # list too (the replay in _active_state stops at it)
+            parent_files, parent_dels = (
+                self._active_state(current) if current is not None else ([], [])
+            )
             removed_set = set(removed)
             snap["files"] = [
                 f for f in parent_files if f["file_path"] not in removed_set
             ] + added
-            # the rebase base carries the delete list too (the replay in
-            # _active_delete_files stops at the same base snapshot)
-            parent_dels = (
-                self._active_delete_files(current) if current is not None else []
-            )
             removed_del_set = set(removed_deletes or [])
             snap["delete_files"] = [
                 d for d in parent_dels if d["file_path"] not in removed_del_set
@@ -679,12 +901,27 @@ class EventTable:
         return snap
 
     # ------------------------------------------------------- file manifests
-    def _snapshot_base_and_deltas(self, version: int) -> tuple[list[dict], list[dict]]:
-        """Find the nearest ancestor ≤ version carrying a full file list,
-        plus the delta snapshots after it (replay chain, newest last)."""
+    @staticmethod
+    def _norm_entry(e) -> dict:
+        # legacy snapshots recorded bare path strings; normalize to entries
+        return e if isinstance(e, dict) else {"file_path": e}
+
+    def _active_state(self, version: int) -> tuple[list[dict], list[dict]]:
+        """(data file entries, position-delete file entries) active AS OF
+        ``version`` — the one manifest replay. Walks back to the nearest
+        cached version or rebase base (rebase snapshots materialize both
+        lists), replays the deltas after it forward once, and caches the
+        pair; a commit whose parent is cached reads one snapshot."""
+        if version in self._active_cache:
+            return self._active_cache[version]
         deltas: list[dict] = []
+        files: list = []
+        dels: list[dict] = []
         v = version
         while v >= 0:
+            if v in self._active_cache:
+                files, dels = self._active_cache[v]
+                break
             try:
                 snap = self._read_snapshot(f"snap-{v:08d}.json")
             except FileNotFoundError:
@@ -697,74 +934,45 @@ class EventTable:
                     "expire_snapshots' retained window"
                 ) from None
             if "files" in snap:
-                return snap["files"], list(reversed(deltas))
-            deltas.append(snap)
-            parent = snap.get("parent_version")
-            v = -1 if parent is None else parent
-        return [], list(reversed(deltas))
-
-    @staticmethod
-    def _norm_entry(e) -> dict:
-        # legacy snapshots recorded bare path strings; normalize to entries
-        return e if isinstance(e, dict) else {"file_path": e}
-
-    def _active_files(self, version: int) -> list[dict]:
-        """Active file entries AS OF ``version`` (manifest replay, cached)."""
-        if version in self._active_cache:
-            return self._active_cache[version]
-        base, deltas = self._snapshot_base_and_deltas(version)
-        files = {self._norm_entry(e)["file_path"]: self._norm_entry(e) for e in base}
-        for snap in deltas:
-            for p in snap.get("removed", []):
-                files.pop(p, None)
-            for e in snap.get("added", []):
-                e = self._norm_entry(e)
-                files[e["file_path"]] = e
-        out = sorted(files.values(), key=lambda d: d["file_path"])
-        self._active_cache[version] = out
-        return out
-
-    def _active_delete_files(self, version: int) -> list[dict]:
-        """Active POSITION-DELETE file entries AS OF ``version`` — the
-        merge-on-read side of the manifest replay (Iceberg v2 delete
-        files). Entries carry ``file_path`` (the delete parquet),
-        ``row_count``, ``file_size_bytes``, and ``referenced_files``
-        (the data files whose positions it tombstones — bounded by
-        design: a takedown touches few files of a 100 TB table, and
-        that list is what lets compaction drop consumed delete files
-        and scan planning skip non-intersecting ones)."""
-        if version in self._active_delete_cache:
-            return self._active_delete_cache[version]
-        deltas: list[dict] = []
-        base: list[dict] = []
-        v = version
-        while v >= 0:
-            try:
-                snap = self._read_snapshot(f"snap-{v:08d}.json")
-            except FileNotFoundError:
-                raise ValueError(
-                    f"snapshot {v} (reached resolving version {version}) "
-                    "has been expired — time travel is bounded by "
-                    "expire_snapshots' retained window"
-                ) from None
-            if "files" in snap:
-                # rebase snapshots materialize BOTH lists; rebase
-                # snapshots written before merge-on-read existed have no
-                # delete files by construction
-                base = snap.get("delete_files", [])
+                # rebases written before merge-on-read existed carry no
+                # delete list: they had no delete files by construction
+                files, dels = snap["files"], snap.get("delete_files", [])
                 break
             deltas.append(snap)
             parent = snap.get("parent_version")
             v = -1 if parent is None else parent
-        dels = {e["file_path"]: e for e in base}
+        live = {e["file_path"]: e for e in map(self._norm_entry, files)}
+        live_dels = {d["file_path"]: d for d in dels}
         for snap in reversed(deltas):
+            for p in snap.get("removed", []):
+                live.pop(p, None)
+            for e in map(self._norm_entry, snap.get("added", [])):
+                live[e["file_path"]] = e
             for p in snap.get("removed_deletes", []):
-                dels.pop(p, None)
-            for e in snap.get("added_deletes", []):
-                dels[e["file_path"]] = e
-        out = sorted(dels.values(), key=lambda d: d["file_path"])
-        self._active_delete_cache[version] = out
+                live_dels.pop(p, None)
+            for d in snap.get("added_deletes", []):
+                live_dels[d["file_path"]] = d
+        out = (
+            sorted(live.values(), key=lambda d: d["file_path"]),
+            sorted(live_dels.values(), key=lambda d: d["file_path"]),
+        )
+        self._active_cache[version] = out
         return out
+
+    def _active_files(self, version: int) -> list[dict]:
+        """Active data file entries AS OF ``version``."""
+        return self._active_state(version)[0]
+
+    def _active_delete_files(self, version: int) -> list[dict]:
+        """Active POSITION-DELETE file entries AS OF ``version`` — the
+        merge-on-read side of the manifest (Iceberg v2 delete files).
+        Entries carry ``file_path`` (the delete parquet), ``row_count``,
+        ``file_size_bytes``, and ``referenced_files`` (the data files
+        whose positions it tombstones — bounded by design: a takedown
+        touches few files of a 100 TB table, and that list is what lets
+        compaction drop consumed delete files and scan planning skip
+        non-intersecting ones)."""
+        return self._active_state(version)[1]
 
     def delete_files(self, version: int | None = None) -> list[dict]:
         """Active position-delete file entries (the ``t.delete_files``
@@ -850,26 +1058,17 @@ class EventTable:
             version = self.latest_version()
         if version is None:
             return []
-        out = []
-        for e in self._active_files(version):
-            if ts_min is not None and "max_ts" in e and e["max_ts"] < ts_min:
-                continue
-            if ts_max is not None and "min_ts" in e and e["min_ts"] > ts_max:
-                continue
-            if (
-                topic is not None
-                and "min_topic" in e
-                and not (e["min_topic"] <= topic <= e["max_topic"])
-            ):
-                continue
-            if (
-                partition is not None
-                and "min_part" in e
-                and not (e["min_part"] <= partition <= e["max_part"])
-            ):
-                continue
-            out.append(e)
-        return out
+        constraints = [
+            (col, op, value)
+            for col, op, value in (
+                ("timestamp_ms", ">=", ts_min),
+                ("timestamp_ms", "<=", ts_max),
+                ("topic", "==", topic),
+                ("partition", "==", partition),
+            )
+            if value is not None
+        ]
+        return [e for e in self._active_files(version) if _entry_admits(e, constraints)]
 
     def external_ddl(self, view_name: str | None = None, version: int | None = None) -> str:
         """DDL that lets an EXTERNAL engine (DuckDB dialect; Trino/Spark
@@ -965,21 +1164,11 @@ class EventTable:
         global latest-n plan would hit.  If no provable cover is found,
         every candidate is returned (still filter-pruned, never wrong)."""
 
-        def _admits(e: dict, lo_key: str, hi_key: str, value) -> bool:
-            if lo_key not in e or hi_key not in e:
-                return True  # no stats — never skippable
-            return e[lo_key] <= value <= e[hi_key]
-
         def _pins(e: dict, lo_key: str, hi_key: str, value) -> bool:
             return e.get(lo_key) == value and e.get(hi_key) == value
 
-        files = self.scan_files(version=version)
-        if topic is not None:
-            files = [e for e in files if _admits(e, "min_topic", "max_topic", topic)]
-        if partition is not None:
-            files = [e for e in files if _admits(e, "min_part", "max_part", partition)]
+        files = self.scan_files(version=version, topic=topic, partition=partition)
         with_ts = [f for f in files if "max_ts" in f]
-        no_stats = [f for f in files if "max_ts" not in f]  # never skippable
 
         def _provable_rows(e: dict) -> int:
             if topic is not None and not _pins(e, "min_topic", "max_topic", topic):
@@ -1000,7 +1189,8 @@ class EventTable:
             # matching rows than n) — scan every candidate
             return files
         theta = min(f.get("min_ts", f["max_ts"]) for f in taken)
-        return [f for f in with_ts if f["max_ts"] >= theta] + no_stats
+        # files without ts stats are never skippable: _entry_admits keeps them
+        return [f for f in files if _entry_admits(f, [("timestamp_ms", ">=", theta)])]
 
     def scan_latest(
         self,
@@ -1141,6 +1331,10 @@ class EventTable:
         write parquet blooms) in the tiny-file regime, over flat
         primitive schemas; everything else keeps the JVM vectorized
         writer, where big-file setup amortizes to zero.
+
+        Returns :meth:`_stage_arrow`'s per-file manifest entries on the
+        Arrow route; None on the JVM route, whose files
+        :meth:`_move_staged_in` reads the footers of.
         """
         if expected_ndv == 0 and tiny and self._arrow_writable_schema():
             return self._stage_arrow(shaped, staging, cap)
@@ -1197,10 +1391,11 @@ class EventTable:
         group boundaries are found by one vector compare on the combined
         key and every group is a zero-copy table slice.
 
-        Returns per-file manifest stats keyed by staging-relative path,
-        computed at WRITE time from the same Arrow data the file holds —
-        :meth:`_move_staged_in` then skips re-opening hundreds of footers
-        AND promotes ONLY the files this successful job reported, so a
+        Returns the manifest entry of every file written, keyed by
+        staging-relative path: each task runs :func:`_parquet_file_entry`
+        on the files it just wrote (a footer read per file, spread over
+        the tasks instead of a driver-side pass). :meth:`_move_staged_in`
+        promotes ONLY the files this successful job reported, so a
         retried/speculative task's leftover staging files (Spark discards
         failed attempts' OUTPUT but not their side effects) can never be
         committed as duplicate rows."""
@@ -1214,27 +1409,6 @@ class EventTable:
         arrow_schema = to_arrow_schema(StructType(data_fields))
         data_cols = [f.name for f in data_fields]
         file_cap = cap
-        STATS_SCHEMA = (
-            "rel string, row_count long, file_size_bytes long, "
-            "min_ts long, max_ts long, min_seq long, max_seq long, "
-            "min_topic string, max_topic string, min_part int, max_part int, "
-            "key_nulls long, col_stats string, col_nulls string, col_nans string"
-        )
-        # extracted columns get per-file bounds (same contract as the
-        # footer path's col_stats — see _parquet_file_entry); the
-        # (name, kind) pairs are resolved driver-side, the bounds
-        # computed write-time from the exact Arrow data the file holds
-        kind_of = {
-            "tinyint": "int", "smallint": "int", "int": "int", "bigint": "int",
-            "string": "string", "float": "float", "double": "float",
-            "boolean": "bool",
-        }
-        stat_cols = [
-            (f.name, kind_of[f.dataType.simpleString()])
-            for f in data_fields
-            if f.name not in SYSTEM_COLUMNS
-            and f.dataType.simpleString() in kind_of
-        ]
 
         def _write_batches(batches):
             import uuid as _uuid
@@ -1244,25 +1418,6 @@ class EventTable:
             import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
-            stats_schema = pa.schema(
-                [
-                    ("rel", pa.string()),
-                    ("row_count", pa.int64()),
-                    ("file_size_bytes", pa.int64()),
-                    ("min_ts", pa.int64()),
-                    ("max_ts", pa.int64()),
-                    ("min_seq", pa.int64()),
-                    ("max_seq", pa.int64()),
-                    ("min_topic", pa.string()),
-                    ("max_topic", pa.string()),
-                    ("min_part", pa.int32()),
-                    ("max_part", pa.int32()),
-                    ("key_nulls", pa.int64()),
-                    ("col_stats", pa.string()),
-                    ("col_nulls", pa.string()),
-                    ("col_nans", pa.string()),
-                ]
-            )
             blist = list(batches)
             out_rows = []
             if blist:
@@ -1303,17 +1458,12 @@ class EventTable:
                             # rows for `x > huge` (Spark orders NaN above
                             # +inf; verified empirically, r15). parquet-mr
                             # drops such stats itself; match it.
-                            nan_counts = {}
-                            for cname, ckind in stat_cols:
-                                if ckind != "float":
-                                    continue
-                                fcol = sl.column(cname)
-                                nan_counts[cname] = (
-                                    0
-                                    if fcol.null_count == len(fcol)
-                                    else int(pc.sum(pc.is_nan(fcol)).as_py() or 0)
-                                )
-                            nan_cols = {c for c, n in nan_counts.items() if n}
+                            nan_cols = {
+                                f.name
+                                for f in sl.schema
+                                if pa.types.is_floating(f.type)
+                                and pc.any(pc.is_nan(sl.column(f.name))).as_py()
+                            }
                             pq.write_table(
                                 sl,
                                 fp,
@@ -1326,77 +1476,18 @@ class EventTable:
                                     ]
                                 ),
                             )
-
-                            def _mm(col):
-                                r = pc.min_max(sl.column(col))
-                                return r["min"].as_py(), r["max"].as_py()
-
-                            tmin, tmax = _mm("timestamp_ms")
-                            smin, smax = _mm("sequence")
-                            topmin, topmax = _mm("topic")
-                            pmin, pmax = _mm("partition")
-                            cstats = {}
-                            cnulls = {}
-                            for cname, ckind in stat_cols:
-                                scol = sl.column(cname)
-                                # exact null counts ALWAYS (zero is the
-                                # valuable case: it lets IS NULL skip)
-                                cnulls[cname] = scol.null_count
-                                if scol.null_count == len(scol):
-                                    continue  # all-null ⇒ no bounds
-                                if cname in nan_cols:
-                                    # bounds over the non-NaN values:
-                                    # the planner restricts them to the
-                                    # NaN-sound operators via col_nans
-                                    valid = pc.filter(
-                                        scol, pc.invert(pc.is_nan(scol))
-                                    )
-                                    if len(valid):
-                                        r = pc.min_max(valid)
-                                        cstats[cname] = [
-                                            r["min"].as_py(),
-                                            r["max"].as_py(),
-                                        ]
-                                    continue
-                                clo, chi = _mm(cname)
-                                if clo is None:
-                                    continue
-                                if ckind == "string":
-                                    # Iceberg truncation: prefix lower,
-                                    # incremented upper (None = one-sided)
-                                    cstats[cname] = [
-                                        truncate_lower_bound(clo),
-                                        truncate_upper_bound(chi),
-                                    ]
-                                else:
-                                    cstats[cname] = [clo, chi]
-                            import json as _json
-
                             out_rows.append(
                                 {
                                     "rel": os.path.join(rel_dir, fname),
-                                    "row_count": sl.num_rows,
-                                    "file_size_bytes": os.path.getsize(fp),
-                                    "min_ts": tmin,
-                                    "max_ts": tmax,
-                                    "min_seq": smin,
-                                    "max_seq": smax,
-                                    "min_topic": topmin,
-                                    "max_topic": topmax,
-                                    "min_part": pmin,
-                                    "max_part": pmax,
-                                    "key_nulls": sl.column("idempotency_key").null_count,
-                                    "col_stats": _json.dumps(cstats) if cstats else None,
-                                    "col_nulls": _json.dumps(cnulls) if cnulls else None,
-                                    "col_nans": _json.dumps(nan_counts)
-                                    if nan_counts
-                                    else None,
+                                    "entry": json.dumps(_parquet_file_entry(fp, staging)),
                                 }
                             )
-            yield pa.RecordBatch.from_pylist(out_rows, schema=stats_schema)
+            yield pa.RecordBatch.from_pylist(
+                out_rows, schema=pa.schema([("rel", pa.string()), ("entry", pa.string())])
+            )
 
-        rows = shaped.mapInArrow(_write_batches, STATS_SCHEMA).collect()
-        return {r["rel"]: r.asDict() for r in rows}
+        rows = shaped.mapInArrow(_write_batches, "rel string, entry string").collect()
+        return {r["rel"]: json.loads(r["entry"]) for r in rows}
 
     @staticmethod
     def _bloom_options(writer, expected_ndv: int | None = None):
@@ -1425,16 +1516,13 @@ class EventTable:
         self, staging: str, prefix: str, stats: dict[str, dict] | None = None
     ) -> list[dict]:
         """Move every staged parquet into the data tree under a fresh
-        unique name and return manifest entries with footer stats.
+        unique name and return their manifest entries.
 
-        rename + footer-stat runs on a thread pool: with hour partitioning
-        a batch easily spans hundreds of directories, and a serial loop of
-        open-footer calls dominates small-batch commit latency (measured
-        720 files: ~2s serial → ~0.3s at 16 threads). Pure I/O, no Spark
-        involvement — safe to parallelize. ``stats`` (from the Arrow
-        staging path) carries write-time per-file stats keyed by
-        staging-relative path; files covered by it skip the footer
-        re-open entirely."""
+        ``stats`` (from :meth:`_stage_arrow`) holds the entries the
+        writing tasks built, keyed by staging-relative path: only those
+        files are promoted, each entry re-pointed at its destination.
+        Without it (JVM-written staging) each moved file's footer is read
+        by :func:`_parquet_file_entry`."""
         plan: list[tuple[str, str, str]] = []
         for dirpath, _dirs, files in os.walk(staging):
             rel = os.path.relpath(dirpath, staging)
@@ -1463,42 +1551,17 @@ class EventTable:
         def _move(src_dest: tuple[str, str, str]) -> dict:
             src, dest, rel_src = src_dest
             self.backend.promote(src, dest)
-            pre = None if stats is None else stats.get(rel_src)
-            if pre is not None:
-                # an all-null stat slice yields None min/max from pyarrow's
-                # min_max; the JVM footer path OMITS such keys, and the
-                # planners treat a missing key as "no stats — never
-                # skippable" (scan_files/plan_latest_files compare without
-                # null guards). Drop None-valued min/max keys so both
-                # writer paths produce the same manifest contract
-                # (ADVICE r7).
-                entry = {
-                    "file_path": dest,
-                    "partition_dir": os.path.relpath(os.path.dirname(dest), self.data_path),
-                    **{
-                        k: v
-                        for k, v in pre.items()
-                        if k not in ("rel", "col_stats", "col_nulls", "col_nans")
-                        and not (v is None and (k.startswith("min_") or k.startswith("max_")))
-                    },
-                }
-                # write-time extracted-column bounds/null/NaN counts ride
-                # as JSON strings through the Arrow stats schema; the
-                # manifest stores the dicts (same shape as the footer
-                # path's col_stats / col_nulls / col_nans)
-                for jk in ("col_stats", "col_nulls", "col_nans"):
-                    if pre.get(jk):
-                        entry[jk] = json.loads(pre[jk])
-                return entry
+            if stats is not None:
+                return {**stats[rel_src], "file_path": dest}
             return _parquet_file_entry(dest, self.data_path)
 
         # Thread pool ONLY for the footer-stat route (stats is None):
         # there each entry re-opens a parquet footer — real I/O that
         # overlaps (measured 720 files: ~2s serial → ~0.3s at 16
-        # threads). With write-time stats the per-file work is just
-        # link+unlink + dict munging, and concurrent renames in sibling
-        # dirs CONTEND in the kernel on the target filesystem (720
-        # moves: 7 ms serial vs 135 ms at 16 threads) — stay serial.
+        # threads). With task-built entries the per-file work is just
+        # link+unlink, and concurrent renames in sibling dirs CONTEND in
+        # the kernel on the target filesystem (720 moves: 7 ms serial vs
+        # 135 ms at 16 threads) — stay serial.
         if stats is None and len(plan) > 4:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -2113,10 +2176,9 @@ class EventTable:
             prior = self.latest_snapshot()
             # plan against the CURRENT parent each attempt: a concurrent
             # compact may have replaced some of the expired files
+            keep = [("timestamp_ms", ">=", ts_ms)]
             doomed = [
-                e
-                for e in self._active_files(expected)
-                if "max_ts" in e and e["max_ts"] < ts_ms
+                e for e in self._active_files(expected) if not _entry_admits(e, keep)
             ]
             if not doomed:
                 return {"files_removed": 0, "rows_removed": 0, "version": expected}
@@ -2512,8 +2574,7 @@ class EventTable:
             # materialize BOTH lists: "files" is the replay-base marker,
             # so omitting the delete list here would silently drop every
             # merge-on-read tombstone older than the expire cut
-            snap["delete_files"] = self._active_delete_files(snap["version"])
-            snap["files"] = self._active_files(snap["version"])
+            snap["files"], snap["delete_files"] = self._active_state(snap["version"])
             tmp = os.path.join(self.meta_path, f".{oldest_kept}.{uuid.uuid4().hex[:8]}.tmp")
             fastjson.dump_to(tmp, snap)
             # atomic rewrite (PUT semantics — replacing an EXISTING
@@ -2524,7 +2585,6 @@ class EventTable:
             expired.append(int(fname[5:13]))
             os.remove(os.path.join(self.meta_path, fname))
         self._active_cache.clear()
-        self._active_delete_cache.clear()
         # drop the expired snapshots from the Iceberg metadata too
         try:
             iceberg_meta.write_metadata_for_commit(self, self.latest_snapshot())
