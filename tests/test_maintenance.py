@@ -59,6 +59,42 @@ def test_landing_zone_retention(spark, tmp_path):
     assert len(removed) == 1 and not os.listdir(landing)
 
 
+def test_remove_orphans_reaps_every_staging_prefix(tmp_path):
+    """Crashed staging trees of every write operation — append, compact
+    and delete (both modes stage under .delete-*) — are reaped, and
+    pending_stats counts their files until then."""
+    from zombi_spark.table.event_table import STAGING_PREFIXES
+    from zombi_spark.table.stats import pending_stats
+
+    t = EventTable(None, str(tmp_path), "t")
+    assert STAGING_PREFIXES == (".append-", ".compact-", ".delete-")
+    trees = [os.path.join(t.path, f"{p}crashed", "event_date=2024-01-01") for p in STAGING_PREFIXES]
+    for d in trees:
+        os.makedirs(d)
+        with open(os.path.join(d, "part-0.parquet"), "w") as fh:
+            fh.write("junk")
+    assert pending_stats(t)["pending_files"] == 3
+    removed = t.remove_orphans(older_than_s=0)
+    assert sorted(removed) == sorted(os.path.join(d, "part-0.parquet") for d in trees)
+    assert not any(os.path.exists(os.path.dirname(d)) for d in trees)
+
+
+def test_compact_never_adopts_uncommitted_parquet(tmp_path):
+    """files() lists the latest snapshot's manifest only: parquet a
+    crashed first append left in the data tree is not a table file, so
+    compaction plans nothing and commits no version 0."""
+    t = EventTable(None, str(tmp_path), "t")
+    hour = os.path.join(t.data_path, "event_date=2024-01-01", "event_hour=0")
+    os.makedirs(hour)
+    for i in range(3):
+        with open(os.path.join(hour, f"part-{i}.parquet"), "w") as fh:
+            fh.write("junk")
+    assert t.files() == []
+    rep = t.compact()
+    assert rep.get("noop") is True and rep["files_rewritten"] == 0
+    assert t.latest_version() is None
+
+
 def test_remove_orphans_grace_window_protects_fresh_files(spark, tmp_path):
     """The older_than_s cutoff: a concurrent append's moved-but-
     uncommitted parquet is unreferenced for the seconds before its

@@ -293,10 +293,19 @@ def test_mor_aborts_when_race_rewrites_referenced_file(spark, tmp_path):
     assert t.read().count() == 8  # nothing was deleted
 
 
-def test_compact_aborts_when_race_adds_tombstones_on_inputs(spark, tmp_path):
-    """Compact read its inputs BEFORE a merge-on-read delete landed on
-    them: committing the rewrite would resurrect the taken-down rows —
-    the rebase must abort (the takedown wins)."""
+@pytest.mark.parametrize(
+    "rewrite",
+    [
+        lambda t: t.compact(min_input_files=1, rewrite_all=True),
+        lambda t: t.delete_where("sequence = 6"),
+    ],
+    ids=["compact", "copy-on-write-delete"],
+)
+def test_compact_aborts_when_race_adds_tombstones_on_inputs(spark, tmp_path, rewrite):
+    """A rewrite (compact, or a copy-on-write delete) read its inputs
+    BEFORE a merge-on-read delete landed on them: committing the rewrite
+    would resurrect the taken-down rows — the rebase must abort (the
+    takedown wins)."""
     t = EventTable(spark, str(tmp_path), "events")
     t.append(prepare_events(_batch(spark, 0, 8)))
     racer = EventTable(spark, str(tmp_path), "events")
@@ -312,7 +321,7 @@ def test_compact_aborts_when_race_adds_tombstones_on_inputs(spark, tmp_path):
     t._commit_snapshot = racing_commit
     try:
         with pytest.raises(CommitConflictError):
-            t.compact(min_input_files=1, rewrite_all=True)
+            rewrite(t)
     finally:
         t._commit_snapshot = orig
     # the takedown is in effect; compacting NOW applies it
@@ -324,6 +333,37 @@ def test_compact_aborts_when_race_adds_tombstones_on_inputs(spark, tmp_path):
     assert sorted(x.sequence for x in t.read().collect()) == [
         s for s in range(1, 9) if s != 4
     ]
+
+
+def test_retention_replans_when_race_replaces_doomed_files(spark, tmp_path):
+    """A compact that rewrote the doomed files between retention's
+    planning and its commit makes the planned delta stale (rebasing it
+    would remove paths no longer active): retention re-plans against the
+    new parent and drops the compacted file instead."""
+    t = EventTable(spark, str(tmp_path), "events")
+    t.append(prepare_events(_batch(spark, 0, 4)))  # hour 0: doomed
+    t.append(prepare_events(_batch(spark, 4, 4), existing=t.read()))
+    t.append(prepare_events(_batch(spark, 7200, 4), existing=t.read()))  # hour 2
+    racer = EventTable(spark, str(tmp_path), "events")
+    orig = t._commit_snapshot
+    calls = {"n": 0}
+
+    def racing_commit(*a, **kw):
+        if calls["n"] == 0:
+            calls["n"] += 1
+            racer.compact(min_input_files=1, rewrite_all=True)
+        return orig(*a, **kw)
+
+    t._commit_snapshot = racing_commit
+    try:
+        r = t.expire_data_older_than(T0 + 3_600_000)
+    finally:
+        t._commit_snapshot = orig
+    assert calls["n"] == 1 and r["rows_removed"] == 8
+    assert r["files_removed"] == 1  # the compacted hour-0 file
+    assert [s["operation"] for s in t.snapshots()][-2:] == ["compact", "retention-delete"]
+    assert r["version"] == t.latest_version()
+    assert sorted(x.sequence for x in t.read().collect()) == list(range(9, 13))
 
 
 def test_invalid_mode_rejected(spark, table):

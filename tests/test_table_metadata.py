@@ -578,6 +578,9 @@ def test_manifest_replay_reads_one_snapshot_per_commit(tmp_path, monkeypatch):
         )
         per_commit.append(len(reads) - before)
     assert max(per_commit[1:]) <= 3, per_commit
+    # the replay cache is bounded: the newest versions only, not one
+    # active-file list per committed version
+    assert len(t._active_cache) <= 2, sorted(t._active_cache)
 
     cold = EventTable(None, str(tmp_path), "t")
     for v in range(40):

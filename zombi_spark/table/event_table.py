@@ -76,6 +76,14 @@ from zombi_spark.table import fastjson, iceberg_meta
 _META_DIR = "_zombi_meta"
 _DATA_DIR = "data"
 
+#: The staging trees ``{table}/.{op}-<uuid>`` of the write operations
+#: that stage parquet before moving it into the data tree. One
+#: declaration: the write paths name their trees from it
+#: (:meth:`EventTable._staging_dir`), :meth:`EventTable.remove_orphans`
+#: reaps crashed trees by it and ``stats.pending_stats`` counts
+#: in-flight files by it.
+STAGING_PREFIXES = (".append-", ".compact-", ".delete-")
+
 #: The canonical system columns every event table carries. Anything NOT
 #: in this set is a schema-config EXTRACTED column (plus
 #: ``_payload_overflow``, excluded by type at each use site). One
@@ -599,9 +607,10 @@ class EventTable:
         # default, object-store semantics via ZOMBI_COMMIT_BACKEND or an
         # explicit instance (see table/commit_backend.py)
         self.backend = backend if backend is not None else get_backend()
-        # version -> (file entries, position-delete file entries);
-        # snapshots are immutable once committed, so only expire_snapshots'
-        # rewrite of the survivor base invalidates it
+        # version -> (file entries, position-delete file entries) for the
+        # two newest versions replayed (bounded: a commit replays from its
+        # cached parent); snapshots are immutable once committed, so only
+        # expire_snapshots' rewrite of the survivor base invalidates it
         self._active_cache: dict[int, tuple[list[dict], list[dict]]] = {}
         if schema_config is not None and schema_config.fields:
             # reject converting a PLAIN table that already holds data:
@@ -822,16 +831,23 @@ class EventTable:
         version = 0 if current is None else current + 1
         added = added or []
         removed = removed or []
-        # the streams map (stream identity → last committed micro-batch
-        # id, the foreachBatch transactional-sink pattern) must survive
-        # EVERY commit, or a compact/retention between a batch's commit
-        # and its checkpoint write would erase the replay guard and a
-        # crash-replay would append unkeyed events twice — carry it
-        # forward exactly like watermarks
-        if "streams" not in summary:
-            parent_snap = self.latest_snapshot()
-            if parent_snap and parent_snap.get("streams"):
-                summary = {**summary, "streams": dict(parent_snap["streams"])}
+        # the watermarks (INV-1's sequence floor) and the streams map
+        # (stream identity → last committed micro-batch id, the
+        # foreachBatch transactional-sink pattern) must survive EVERY
+        # commit: a summary that leaves one out carries the parent's
+        # forward. A compact/retention between a batch's commit and its
+        # checkpoint write would otherwise erase the replay guard and a
+        # crash-replay would append unkeyed events twice.
+        parent_snap = (
+            self._read_snapshot(f"snap-{current:08d}.json")
+            if current is not None and not {"watermarks", "streams"} <= summary.keys()
+            else {}
+        )
+        summary = {
+            "watermarks": dict(parent_snap.get("watermarks", {})),
+            **({"streams": dict(parent_snap["streams"])} if parent_snap.get("streams") else {}),
+            **summary,
+        }
         snap = {
             "version": version,
             "parent_version": current,
@@ -900,6 +916,60 @@ class EventTable:
             )
         return snap
 
+    def _commit_rewrite(
+        self,
+        summary: dict,
+        *,
+        planned: int,
+        planned_deletes: list[dict],
+        added: list[dict] | None = None,
+        removed: list[str] | None = None,
+        added_deletes: list[dict] | None = None,
+    ) -> dict:
+        """Commit a rewrite's immutable delta — the one commit-and-rebase
+        rule of :meth:`compact`, :meth:`delete_where` (both modes) and
+        :meth:`expire_data_older_than` (compaction.rs:98-137,
+        iceberg_storage.rs:360-374).
+
+        ``planned`` is the version the delta was planned against and
+        ``planned_deletes`` the position-delete files active then. Those
+        whose every referenced data file this commit removes are fully
+        consumed and leave the manifest in the same commit.
+
+        On :class:`CommitConflictError` the same delta rebases ONCE onto
+        the new parent, only when that is sound: every file the commit
+        removes or references is still active (a racing append only adds
+        files), and no delete file committed since references a removed
+        file (our rewrite predates its tombstones and would resurrect
+        the rows it took down). Otherwise the conflict re-raises; the
+        rewrite's moved files stay orphans for :meth:`remove_orphans`."""
+        gone = set(removed or [])
+        delta = {
+            "added": added,
+            "removed": removed,
+            "added_deletes": added_deletes,
+            "removed_deletes": [
+                d["file_path"]
+                for d in planned_deletes
+                if d.get("referenced_files") and set(d["referenced_files"]) <= gone
+            ],
+        }
+        try:
+            return self._commit_snapshot(summary, expected_parent=planned, **delta)
+        except CommitConflictError:
+            parent = self.latest_version()
+            files, dels = self._active_state(parent)
+            touched = gone.union(*(d.get("referenced_files", []) for d in added_deletes or []))
+            if not touched <= {e["file_path"] for e in files}:
+                raise
+            seen = {d["file_path"] for d in planned_deletes}
+            if any(
+                d["file_path"] not in seen and gone.intersection(d.get("referenced_files", []))
+                for d in dels
+            ):
+                raise
+            return self._commit_snapshot(summary, expected_parent=parent, **delta)
+
     # ------------------------------------------------------- file manifests
     @staticmethod
     def _norm_entry(e) -> dict:
@@ -911,7 +981,9 @@ class EventTable:
         ``version`` — the one manifest replay. Walks back to the nearest
         cached version or rebase base (rebase snapshots materialize both
         lists), replays the deltas after it forward once, and caches the
-        pair; a commit whose parent is cached reads one snapshot."""
+        pair; a commit whose parent is cached reads one snapshot. The
+        cache keeps the two newest versions replayed, so a long-lived
+        table holds O(files), not O(versions × files)."""
         if version in self._active_cache:
             return self._active_cache[version]
         deltas: list[dict] = []
@@ -957,6 +1029,8 @@ class EventTable:
             sorted(live_dels.values(), key=lambda d: d["file_path"]),
         )
         self._active_cache[version] = out
+        if len(self._active_cache) > 2:
+            del self._active_cache[min(self._active_cache)]
         return out
 
     def _active_files(self, version: int) -> list[dict]:
@@ -1239,86 +1313,64 @@ class EventTable:
         avg_row_bytes = max(size / rows, 1.0)
         return max(int(target_file_bytes / avg_row_bytes), 1000)
 
+    def _staging_dir(self, op: str) -> str:
+        """A fresh staging tree for write operation ``op`` (one of
+        ``STAGING_PREFIXES``) under the table root."""
+        prefix = f".{op}-"
+        assert prefix in STAGING_PREFIXES, op
+        return os.path.join(self.path, prefix + uuid.uuid4().hex)
+
+    def _rewrite_shape(self, inputs: list[dict]) -> dict:
+        """The :meth:`_stage_and_move` routing inputs of a rewrite
+        (compact, copy-on-write delete) from its input manifest entries:
+        one task per storage dir up to the session's parallelism (each
+        dir hashes to ONE shuffle partition; measured 720 single-dir
+        tasks ≈ 9s vs defaultParallelism tasks ≈ 2s), no bloom filter
+        when footer stats prove every key null (720 filters for zero
+        keys were ~1s of compact time; otherwise the output keeps the
+        bloom the dedup probe relies on) and the largest dir's rows."""
+        rows_by_dir: dict[str, int] = {}
+        for f in inputs:
+            d = os.path.dirname(f["file_path"])
+            rows_by_dir[d] = rows_by_dir.get(d, 0) + f.get("row_count", 0)
+        unkeyed = all("key_nulls" in f for f in inputs) and sum(
+            f["key_nulls"] for f in inputs
+        ) == sum(rows_by_dir.values())
+        return {
+            "tasks": max(min(len(rows_by_dir), self.spark.sparkContext.defaultParallelism), 1),
+            "key_ndv": 0 if unkeyed else self._target_records_per_file(128 * 1024 * 1024),
+            "rows_per_dir": max(rows_by_dir.values(), default=0) or None,
+        }
+
     def _stage_and_move(
         self,
         events: DataFrame,
         staging: str,
-        target_file_bytes: int | None = None,
+        *,
+        tasks: int | None = None,
         key_ndv: int | None = None,
-        rows_per_partition: int | None = None,
-        n_rows_total: int | None = None,
-        parts_est: int | None = None,
+        rows_per_dir: int | None = None,
+        cap: int | None = None,
+        order=("timestamp_ms", "sequence"),
+        prefix: str = "",
     ) -> list[dict]:
-        """Write ``events`` into ``staging`` (hive layout), then move every
-        parquet file into the data tree under a fresh unique name. Returns
-        the manifest entries (with footer stats) of the moved files.
+        """The one staged write of append, compact and copy-on-write
+        delete: shuffle ``events`` once on the storage key into ``tasks``
+        tasks (default: the session's parallelism), sort each task
+        partition-columns-first and then by ``order``, write the hive
+        layout into ``staging``, move every parquet file into the data
+        tree under a fresh ``prefix``-ed unique name and remove the
+        staging tree. Returns the manifest entries (with footer stats)
+        of the moved files.
 
-        ``key_ndv`` is the batch's per-file idempotency-key NDV estimate
-        (0 = unkeyed batch → no bloom at all). ``rows_per_partition`` is
-        the batch's estimated rows per (event_date, event_hour) dir: when
-        the batch is spread thin (a wide-time-range backfill at small
-        scale), the parquet writer's default 128 MB row-group buffer is
-        pure per-file allocation overhead, so tiny-file batches drop to a
-        4 MB block size (measured ~10% off a 720-file append; real
-        hour-dense batches keep the big row groups).
-
-        The move happens BEFORE the snapshot commit; a crash mid-move
-        leaves some files in the data tree but referenced by no snapshot —
-        invisible to read() and reclaimed by remove_orphans()."""
-        par = self.spark.sparkContext.defaultParallelism
-        # Size the write exchange to the BATCH, capped at the session's
-        # parallelism (scale-adaptive, not a local-mode constant): one
-        # task per ~20k rows floors a hot-hour batch's writer
-        # parallelism, parts_est keeps a wide-time-range backfill fanned
-        # out across hour dirs (each hour hashes to exactly one task at
-        # ANY count, so files-per-dir and file contents are identical —
-        # only how many tasks run changes). Callers that don't know the
-        # batch shape keep the full-width default.
-        if n_rows_total is not None or parts_est is not None:
-            want = max(
-                parts_est or 0, -(-(n_rows_total or 0) // 20_000), 1
-            )
-            par = min(par, want)
-        cap = (
-            self._target_records_per_file(target_file_bytes)
-            if target_file_bytes is not None
-            else None
-        )
-        # the sort must LEAD with the partition columns: the planned
-        # write requires child ordering to start with them and otherwise
-        # inserts its own Sort(event_date, event_hour), silently
-        # replacing the (timestamp_ms, sequence) within-file order that
-        # row-group min/max skipping depends on (found in round 6 by
-        # reading the written footers back — the files were unsorted)
-        shaped = events.repartition(par, "event_date", "event_hour").sortWithinPartitions(
-            "event_date", "event_hour", "timestamp_ms", "sequence"
-        )
-        many_tiny_files = (
-            rows_per_partition is not None and rows_per_partition < 100_000
-        )
-        stats = self._write_staged(
-            shaped,
-            staging,
-            expected_ndv=key_ndv if key_ndv is not None else cap,
-            tiny=many_tiny_files,
-            cap=cap,
-        )
-        moved = self._move_staged_in(staging, prefix="", stats=stats)
-        self._rmtree(staging)
-        return moved
-
-    def _write_staged(
-        self,
-        shaped: DataFrame,
-        staging: str,
-        expected_ndv: int | None,
-        tiny: bool,
-        cap: int | None,
-    ) -> dict[str, dict] | None:
-        """Route a shaped (repartitioned + partition-cols-first-sorted)
-        frame to staging parquet. Shared by append, compact and
-        delete_where — they produce the same hive layout and face the
-        same cost model.
+        ``key_ndv`` is the per-file idempotency-key NDV estimate that
+        sizes the bloom filter (0 = unkeyed output → no bloom at all).
+        ``rows_per_dir`` is the estimated rows per (event_date,
+        event_hour) dir: below 100k the output is thin (a wide-time-range
+        backfill at small scale), where the parquet writer's default
+        128 MB row-group buffer is pure per-file allocation overhead, so
+        it drops to a 4 MB block size (measured ~10% off a 720-file
+        append). ``cap`` rolls a file over at that many rows.
 
         Many-small-files fast path (the 25k ev/s gap, VERDICT r6 #3):
         parquet-mr pays ~3.5ms of writer setup/teardown PER FILE, so a
@@ -1327,30 +1379,43 @@ class EventTable:
         shuffle+sort is 0.3s; codec and dictionary immaterial). The
         Arrow writer's per-file cost is ~10× lower (measured: 720-dir
         batch 3.0s JVM → 1.2s Arrow). Scope: UNKEYED output only
-        (``expected_ndv == 0`` ⇒ no bloom filter — pyarrow 16 cannot
-        write parquet blooms) in the tiny-file regime, over flat
-        primitive schemas; everything else keeps the JVM vectorized
-        writer, where big-file setup amortizes to zero.
+        (``key_ndv == 0`` ⇒ no bloom filter — pyarrow 16 cannot write
+        parquet blooms) in the thin regime, over flat primitive schemas;
+        everything else keeps the JVM vectorized writer, where big-file
+        setup amortizes to zero.
 
-        Returns :meth:`_stage_arrow`'s per-file manifest entries on the
-        Arrow route; None on the JVM route, whose files
-        :meth:`_move_staged_in` reads the footers of.
-        """
-        if expected_ndv == 0 and tiny and self._arrow_writable_schema():
-            return self._stage_arrow(shaped, staging, cap)
-        writer = self._bloom_options(
-            shaped.write.mode("overwrite").partitionBy("event_date", "event_hour"),
-            expected_ndv=expected_ndv,
-        )
-        if tiny:
-            writer = writer.option("parquet.block.size", str(4 * 1024 * 1024))
-        if cap is not None:
-            # a single hot hour inside one task would otherwise become
-            # ONE arbitrarily large file; maxRecordsPerFile rolls the
-            # writer over at the byte-derived row cap
-            writer = writer.option("maxRecordsPerFile", cap)
-        writer.parquet(staging)
-        return None
+        The move happens BEFORE the snapshot commit; a crash mid-move
+        leaves some files in the data tree but referenced by no snapshot —
+        invisible to read() and reclaimed by remove_orphans()."""
+        # the sort must LEAD with the partition columns: the planned
+        # write requires child ordering to start with them and otherwise
+        # inserts its own Sort(event_date, event_hour), silently
+        # replacing the (timestamp_ms, sequence) within-file order that
+        # row-group min/max skipping depends on (found in round 6 by
+        # reading the written footers back — the files were unsorted)
+        shaped = events.repartition(
+            tasks or self.spark.sparkContext.defaultParallelism, "event_date", "event_hour"
+        ).sortWithinPartitions("event_date", "event_hour", *order)
+        thin = rows_per_dir is not None and rows_per_dir < 100_000
+        stats = None
+        if key_ndv == 0 and thin and self._arrow_writable_schema():
+            stats = self._stage_arrow(shaped, staging, cap)
+        else:
+            writer = self._bloom_options(
+                shaped.write.mode("overwrite").partitionBy("event_date", "event_hour"),
+                expected_ndv=key_ndv,
+            )
+            if thin:
+                writer = writer.option("parquet.block.size", str(4 * 1024 * 1024))
+            if cap is not None:
+                # a single hot hour inside one task would otherwise become
+                # ONE arbitrarily large file; maxRecordsPerFile rolls the
+                # writer over at the row cap
+                writer = writer.option("maxRecordsPerFile", cap)
+            writer.parquet(staging)
+        moved = self._move_staged_in(staging, prefix=prefix, stats=stats)
+        self._rmtree(staging)
+        return moved
 
     _ARROW_SAFE_TYPES = (
         "string", "binary", "tinyint", "smallint", "int", "bigint",
@@ -1570,15 +1635,19 @@ class EventTable:
         return [_move(p) for p in plan]
 
     @staticmethod
-    def _rmtree(root: str) -> None:
+    def _rmtree(root: str) -> list[str]:
+        """Remove the tree ``root``; returns the files removed."""
         # deliberately serial: a threaded first-level fan-out (16 workers
         # over the 30 date dirs) measured 800 ms vs 165 ms for this walk
         # on the target filesystem — concurrent unlink/rmdir in sibling
         # directories contends in the kernel here, it doesn't overlap
+        gone = []
         for dirpath, _dirs, files in os.walk(root, topdown=False):
             for f in files:
-                os.remove(os.path.join(dirpath, f))
+                gone.append(os.path.join(dirpath, f))
+                os.remove(gone[-1])
             os.rmdir(dirpath)
+        return gone
 
     def append(
         self,
@@ -1650,7 +1719,6 @@ class EventTable:
         else:
             base = self.latest_snapshot()
             base_wm = dict(base.get("watermarks", {})) if base else {}
-        staging = os.path.join(self.path, f".append-{uuid.uuid4().hex}")
         # ONE stats job before the write does double duty (it also
         # materializes the cache the write then reads from):
         #  - per-(topic, partition) high watermarks — the tiny frame the
@@ -1694,25 +1762,29 @@ class EventTable:
             else max(1024, 2 * kndv_total // max(n_storage_parts, 1))
         )
         n_rows_total = sum(r["n_rows"] for r in pstats)
-        rows_per_partition = n_rows_total // max(n_storage_parts, 1)
-        # explicit partition count inside _stage_and_move: with bare
-        # repartition(cols), AQE coalesces a small batch's shuffle to ~1
-        # partition and ONE task then writes every hour directory serially
-        # (measured 11s for 744 dirs at sf0.1; ~32 tasks cut it to ~2s).
-        # parts_est (Σ per-producer storage-part NDV — an overestimate
-        # when producers share hours, which only errs toward more tasks)
-        # lets _stage_and_move size that count to the BATCH instead of
-        # pinning it at defaultParallelism: a wide backfill still fans
-        # out to every core, a small batch no longer launches one write
-        # task (and one Python worker, on the Arrow route) per core.
+        # Size the write exchange to the BATCH, capped at the session's
+        # parallelism: with bare repartition(cols), AQE coalesces a small
+        # batch's shuffle to ~1 partition and ONE task then writes every
+        # hour directory serially (measured 11s for 744 dirs at sf0.1; ~32
+        # tasks cut it to ~2s), while one task per core launches one write
+        # task (and one Python worker, on the Arrow route) per core for a
+        # tiny batch. One task per ~20k rows floors a hot-hour batch's
+        # writer parallelism; parts_est (Σ per-producer storage-part NDV —
+        # an overestimate when producers share hours, which only errs
+        # toward more tasks) keeps a wide-time-range backfill fanned out.
+        # Each hour hashes to exactly one task at ANY count, so files per
+        # dir and file contents are identical — only the task count moves.
+        parts_est = sum(r["nparts"] for r in pstats)
         added = self._stage_and_move(
             events,
-            staging,
-            target_file_bytes=target_file_bytes,
+            self._staging_dir("append"),
+            tasks=min(
+                self.spark.sparkContext.defaultParallelism,
+                max(parts_est, -(-n_rows_total // 20_000), 1),
+            ),
             key_ndv=key_ndv,
-            rows_per_partition=rows_per_partition,
-            n_rows_total=n_rows_total,
-            parts_est=sum(r["nparts"] for r in pstats),
+            rows_per_dir=n_rows_total // max(n_storage_parts, 1),
+            cap=self._target_records_per_file(target_file_bytes),
         )
         # Commit with bounded optimistic retry (the reference serializes
         # flush commits per topic with a mutex, iceberg_storage.rs:360-374;
@@ -2023,33 +2095,35 @@ class EventTable:
     def files(self) -> list[dict]:
         """ACTIVE data files with sizes (analogue of Iceberg ``t.files`` /
         S11) — the latest snapshot's manifest, not a directory walk, so
-        uncommitted junk never appears and the call is O(manifest)."""
+        uncommitted junk never appears (a table with no snapshot has no
+        active file, whatever a crashed first append left on disk) and
+        the call is O(manifest)."""
         latest = self.latest_version()
-        if latest is not None:
-            return [
-                {
-                    "file_path": e["file_path"],
-                    "partition_dir": e.get(
-                        "partition_dir",
-                        os.path.relpath(os.path.dirname(e["file_path"]), self.data_path),
-                    ),
-                    "file_size_bytes": e.get("file_size_bytes", os.path.getsize(e["file_path"])),
-                    **{
-                        k: e[k]
-                        for k in (
-                            "row_count", "min_ts", "max_ts", "min_seq", "max_seq",
-                            "min_topic", "max_topic", "min_part", "max_part",
-                            "key_nulls",
-                        )
-                        if k in e
-                    },
-                }
-                for e in self._active_files(latest)
-            ]
-        return self._walk_data_files()
+        if latest is None:
+            return []
+        return [
+            {
+                "file_path": e["file_path"],
+                "partition_dir": e.get(
+                    "partition_dir",
+                    os.path.relpath(os.path.dirname(e["file_path"]), self.data_path),
+                ),
+                "file_size_bytes": e.get("file_size_bytes", os.path.getsize(e["file_path"])),
+                **{
+                    k: e[k]
+                    for k in (
+                        "row_count", "min_ts", "max_ts", "min_seq", "max_seq",
+                        "min_topic", "max_topic", "min_part", "max_part",
+                        "key_nulls",
+                    )
+                    if k in e
+                },
+            }
+            for e in self._active_files(latest)
+        ]
 
     def _walk_data_files(self) -> list[dict]:
-        """Physical directory listing (pre-snapshot tables, orphan sweep)."""
+        """Physical directory listing (orphan sweep, pending-file stats)."""
         out = []
         for dirpath, _dirs, files in os.walk(self.data_path):
             for f in files:
@@ -2073,22 +2147,17 @@ class EventTable:
         live: set[str] = set()
         for fname in self._snapshot_files():
             snap = self._read_snapshot(fname)
-            for e in snap.get("files", []):
-                live.add(self._norm_entry(e)["file_path"])
-            for e in snap.get("added", []):
-                live.add(self._norm_entry(e)["file_path"])
             # position-delete files are snapshot-referenced artifacts too
-            for e in snap.get("delete_files", []):
-                live.add(e["file_path"])
-            for e in snap.get("added_deletes", []):
-                live.add(e["file_path"])
+            for key in ("files", "added", "delete_files", "added_deletes"):
+                live.update(self._norm_entry(e)["file_path"] for e in snap.get(key, []))
         return live
 
     def remove_orphans(self, older_than_s: float = 3600.0) -> list[str]:
         """M4: delete artifacts no retained snapshot references — crashed
-        appends' moved-but-uncommitted parquet, staging trees, interrupted
-        meta commits (``remove_orphan_files`` analogue, compaction.rs:350-364,
-        iceberg_storage.rs:1587-1600). Files referenced by *any* retained
+        appends' moved-but-uncommitted parquet, the staging trees of every
+        write operation (one declaration: ``STAGING_PREFIXES``),
+        interrupted meta commits (``remove_orphan_files`` analogue,
+        compaction.rs:350-364, iceberg_storage.rs:1587-1600). Files referenced by *any* retained
         snapshot are live (time travel), not just the latest.
 
         ``older_than_s`` is the grace window for concurrent writers: an
@@ -2116,19 +2185,14 @@ class EventTable:
                     os.remove(f["file_path"])
                     removed.append(f["file_path"])
         # 2) walk the table root: crashed stage-and-move trees
-        #    ({path}/.append-* and {path}/.compact-*) and interrupted meta
+        #    ({path}/.append-*, .compact-*, .delete-*) and interrupted meta
         #    commits (.snap-*.json.tmp)
         for dirpath, dirs, files in os.walk(self.path, topdown=False):
             for d in list(dirs):
-                if d.startswith((".compact-", ".append-")) or d == "_temporary":
+                if d.startswith(STAGING_PREFIXES) or d == "_temporary":
                     full = os.path.join(dirpath, d)
-                    if not _expired(full):
-                        continue
-                    for sub, _ds, fs in os.walk(full, topdown=False):
-                        for f in fs:
-                            os.remove(os.path.join(sub, f))
-                            removed.append(os.path.join(sub, f))
-                        os.rmdir(sub)
+                    if _expired(full):
+                        removed += self._rmtree(full)
             for f in files:
                 # interrupted meta commits come in two shapes: dotted
                 # (.snap-*.json.tmp, .ROLLUP.json.*.tmp) AND undotted
@@ -2171,47 +2235,36 @@ class EventTable:
         across retention (INV-1 outlives the data)."""
         if self.latest_version() is None:
             return {"files_removed": 0, "rows_removed": 0, "version": None}
+        keep = [("timestamp_ms", ">=", ts_ms)]
         for _attempt in range(5):
             expected = self.latest_version()
-            prior = self.latest_snapshot()
             # plan against the CURRENT parent each attempt: a concurrent
             # compact may have replaced some of the expired files
-            keep = [("timestamp_ms", ">=", ts_ms)]
             doomed = [
                 e for e in self._active_files(expected) if not _entry_admits(e, keep)
             ]
             if not doomed:
                 return {"files_removed": 0, "rows_removed": 0, "version": expected}
-            summary = {
-                "operation": "retention-delete",
-                "watermarks": dict(prior.get("watermarks", {})) if prior else {},
-                "retention_cutoff_ms": ts_ms,
-                "files_removed": len(doomed),
-                "rows_removed": sum(e.get("row_count", 0) for e in doomed),
-            }
-            # delete files whose every referenced data file ages out with
-            # this cut are fully dead — drop them in the same commit
-            doomed_paths = {e["file_path"] for e in doomed}
-            consumed = [
-                d["file_path"]
-                for d in self._active_delete_files(expected)
-                if d.get("referenced_files")
-                and set(d["referenced_files"]) <= doomed_paths
-            ]
+            rows_removed = sum(e.get("row_count", 0) for e in doomed)
             try:
-                snap = self._commit_snapshot(
-                    summary,
+                snap = self._commit_rewrite(
+                    {
+                        "operation": "retention-delete",
+                        "retention_cutoff_ms": ts_ms,
+                        "files_removed": len(doomed),
+                        "rows_removed": rows_removed,
+                    },
+                    planned=expected,
+                    planned_deletes=self._active_delete_files(expected),
                     removed=[e["file_path"] for e in doomed],
-                    expected_parent=expected,
-                    removed_deletes=consumed,
                 )
-                return {
-                    "files_removed": len(doomed),
-                    "rows_removed": summary["rows_removed"],
-                    "version": snap["version"],
-                }
             except CommitConflictError:
-                continue  # raced another commit: re-plan and retry
+                continue  # a racing commit took a doomed file: re-plan
+            return {
+                "files_removed": len(doomed),
+                "rows_removed": rows_removed,
+                "version": snap["version"],
+            }
         raise CommitConflictError("retention delete could not commit after 5 rebases")
 
     def delete_where(
@@ -2264,17 +2317,16 @@ class EventTable:
         are fresh UUIDs on every write, so a recorded position can
         never mis-apply to a later file.
 
-        Concurrency (both modes): inputs are immutable and a racing
-        append only adds files, so on :class:`CommitConflictError` the
-        same delta rebases once (compaction.rs:98-137's optimistic-retry
-        rule); if a racing compact/retention removed one of our inputs —
-        or, for copy-on-write, a racing merge-on-read delete tombstoned
-        rows inside them (committing our rewrite would resurrect exactly
-        those rows) — abort: the caller re-plans. Old snapshots still
-        serve the deleted rows (time travel) until ``expire_snapshots``
-        + ``remove_orphans``; a *guaranteed-erasure* workflow is
-        delete_where → (compact for merge-on-read) → expire_snapshots →
-        remove_orphans.
+        Concurrency (both modes) is :meth:`_commit_rewrite`'s one rule:
+        a racing append is absorbed by rebasing the same delta once; a
+        racing compact/retention that removed a file we rewrite or
+        reference — or, for copy-on-write, a racing merge-on-read delete
+        that tombstoned rows inside our inputs — raises
+        :class:`CommitConflictError` and the caller re-plans. Old
+        snapshots still serve the deleted rows (time travel) until
+        ``expire_snapshots`` + ``remove_orphans``; a *guaranteed-erasure*
+        workflow is delete_where → (compact for merge-on-read) →
+        expire_snapshots → remove_orphans.
 
         ``predicate`` is a Column or a SQL string. Returns
         ``{"files_rewritten", "rows_removed", "version", "noop"?}``;
@@ -2287,9 +2339,10 @@ class EventTable:
             )
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         hit = F.coalesce(pred, F.lit(False))  # NULL predicate = keep
-        if self.latest_version() is None:
-            return {"files_rewritten": 0, "rows_removed": 0, "version": None, "noop": True}
         expected_parent = self.latest_version()
+        noop = {"files_rewritten": 0, "rows_removed": 0, "version": expected_parent, "noop": True}
+        if expected_parent is None:
+            return noop
         candidates = {
             e["file_path"]: e
             for e in self.scan_files(
@@ -2301,12 +2354,7 @@ class EventTable:
             )
         }
         if not candidates:
-            return {
-                "files_rewritten": 0,
-                "rows_removed": 0,
-                "version": expected_parent,
-                "noop": True,
-            }
+            return noop
         active_dels = self._active_delete_files(expected_parent)
         # phase 1: per-file match counts over LIVE rows (column-pruned
         # scan; stats and the idempotency-key bloom prune row groups
@@ -2338,98 +2386,36 @@ class EventTable:
             # a snapshot for an empty delta
             if mode == "merge-on-read":
                 hits.unpersist()
-            return {
-                "files_rewritten": 0,
-                "rows_removed": 0,
-                "version": expected_parent,
-                "noop": True,
-            }
+            return noop
         if mode == "merge-on-read":
             return self._commit_position_deletes(
-                hits, sorted(matched), rows_removed, expected_parent
+                hits, sorted(matched), rows_removed, expected_parent, active_dels
             )
         # phase 2: rewrite ONLY the matched files without the doomed rows
         # (and without rows prior merge-on-read deletes already removed —
         # carrying them into the rewrite would resurrect them, since the
         # tombstones point at the OLD paths)
         inputs = [candidates[p] for p in matched]
-        survivors = (
-            self._position_delete_probe(
-                self._read_file_list(sorted(matched)), active_dels
-            )
-            .drop("_zdel_file", "_zdel_pos")
-            .where(~hit)
+        survivors = self._apply_position_deletes(
+            self._read_file_list(sorted(matched)), active_dels
+        ).where(~hit)
+        added = self._stage_and_move(
+            survivors,
+            self._staging_dir("delete"),
+            prefix="deleted-",
+            **self._rewrite_shape(inputs),
         )
-        staging = os.path.join(self.path, f".delete-{uuid.uuid4().hex}")
-        ntasks = max(min(len(inputs), self.spark.sparkContext.defaultParallelism), 1)
-        all_unkeyed = all("key_nulls" in f for f in inputs) and sum(
-            f["key_nulls"] for f in inputs
-        ) == sum(f.get("row_count", 0) for f in inputs)
-        # same routing as append/compact: a takedown over small unkeyed
-        # hour-files takes the Arrow writer, keyed/big output stays JVM
-        max_part_rows = max((f.get("row_count", 0) for f in inputs), default=0)
-        wstats = self._write_staged(
-            survivors.repartition(ntasks, "event_date", "event_hour")
-            .sortWithinPartitions("event_date", "event_hour", "timestamp_ms", "sequence"),
-            staging,
-            expected_ndv=0
-            if all_unkeyed
-            else self._target_records_per_file(128 * 1024 * 1024),
-            tiny=0 < max_part_rows < 100_000,
-            cap=None,
+        snap = self._commit_rewrite(
+            {
+                "operation": "row-delete",
+                "files_rewritten": len(inputs),
+                "rows_removed": rows_removed,
+            },
+            planned=expected_parent,
+            planned_deletes=active_dels,
+            added=added,
+            removed=list(matched),
         )
-        added = self._move_staged_in(staging, prefix="deleted-", stats=wstats)
-        self._rmtree(staging)
-        # position-delete files whose every referenced data file is being
-        # rewritten are fully consumed: every position they hold points at
-        # a removed path — drop them in the same commit
-        consumed = [
-            d["file_path"]
-            for d in active_dels
-            if d.get("referenced_files")
-            and set(d["referenced_files"]) <= set(matched)
-        ]
-        prior = self.latest_snapshot()
-        summary = {
-            "operation": "row-delete",
-            "watermarks": dict(prior.get("watermarks", {})) if prior else {},
-            "files_rewritten": len(inputs),
-            "rows_removed": rows_removed,
-        }
-        try:
-            snap = self._commit_snapshot(
-                summary,
-                added=added,
-                removed=list(matched),
-                expected_parent=expected_parent,
-                removed_deletes=consumed,
-            )
-        except CommitConflictError:
-            # rebase once — sound iff every input survives on the new
-            # parent (appends only add; a racing compact that swallowed
-            # an input means our counts are stale: abort, orphans reaped)
-            new_parent = self.latest_version()
-            active = {e["file_path"] for e in self._active_files(new_parent)}
-            if not set(matched) <= active:
-                raise
-            # and iff no NEW merge-on-read delete landed on our inputs in
-            # the gap: our rewrite predates its tombstones, so committing
-            # would resurrect exactly the rows it took down
-            applied = {d["file_path"] for d in active_dels}
-            for d in self._active_delete_files(new_parent):
-                if d["file_path"] not in applied and set(
-                    d.get("referenced_files", [])
-                ) & set(matched):
-                    raise
-            prior = self.latest_snapshot()
-            summary["watermarks"] = dict(prior.get("watermarks", {})) if prior else {}
-            snap = self._commit_snapshot(
-                summary,
-                added=added,
-                removed=list(matched),
-                expected_parent=new_parent,
-                removed_deletes=consumed,
-            )
         return {
             "files_rewritten": len(inputs),
             "rows_removed": rows_removed,
@@ -2442,14 +2428,16 @@ class EventTable:
         referenced: list[str],
         rows_removed: int,
         expected_parent: int,
+        active_dels: list[dict],
     ) -> dict:
         """Merge-on-read commit half of :meth:`delete_where`: write the
         matched (file, pos) pairs as one sorted Iceberg-v2-shaped
         position-delete parquet under ``data/_deletes/`` (the leading
         underscore keeps directory-globbing engines from reading it as
         data; our own planners read explicit manifest lists) and commit
-        it as an ``added_deletes`` delta — no data file is touched."""
-        staging = os.path.join(self.path, f".delete-{uuid.uuid4().hex}")
+        it as an ``added_deletes`` delta through :meth:`_commit_rewrite`
+        — no data file is touched."""
+        staging = self._staging_dir("delete")
         try:
             (
                 hits.select(
@@ -2480,36 +2468,18 @@ class EventTable:
             "file_size_bytes": os.path.getsize(dest),
             "referenced_files": referenced,
         }
-        prior = self.latest_snapshot()
-        summary = {
-            "operation": "row-delete",
-            "mode": "merge-on-read",
-            "watermarks": dict(prior.get("watermarks", {})) if prior else {},
-            "files_rewritten": 0,
-            "rows_removed": rows_removed,
-            "files_referenced": len(referenced),
-        }
-        try:
-            snap = self._commit_snapshot(
-                summary, expected_parent=expected_parent, added_deletes=[entry]
-            )
-        except CommitConflictError:
-            # rebase once: sound iff every referenced data file is still
-            # active (a racing rewrite means our positions point at paths
-            # the new snapshot no longer reads — the takedown would
-            # silently delete nothing: abort, the caller re-plans)
-            new_parent = self.latest_version()
-            active = {e["file_path"] for e in self._active_files(new_parent)}
-            if not set(referenced) <= active:
-                raise
-            summary["watermarks"] = (
-                dict(self.latest_snapshot().get("watermarks", {}))
-                if self.latest_snapshot()
-                else {}
-            )
-            snap = self._commit_snapshot(
-                summary, expected_parent=new_parent, added_deletes=[entry]
-            )
+        snap = self._commit_rewrite(
+            {
+                "operation": "row-delete",
+                "mode": "merge-on-read",
+                "files_rewritten": 0,
+                "rows_removed": rows_removed,
+                "files_referenced": len(referenced),
+            },
+            planned=expected_parent,
+            planned_deletes=active_dels,
+            added_deletes=[entry],
+        )
         return {
             "files_rewritten": 0,
             "rows_removed": rows_removed,
@@ -2550,8 +2520,6 @@ class EventTable:
                 min_pos = min(positions.values())
                 safe_cut = sum(1 for n in names if int(n[5:13]) <= min_pos)
                 if safe_cut < cut:
-                    import logging
-
                     lagging = {
                         g: p for g, p in positions.items() if p < int(names[cut][5:13])
                     }
@@ -2641,11 +2609,10 @@ class EventTable:
         maintenance policy records its observed pre-version there so a
         restarted daemon recovers the exact watermark).
 
-        If an append commits concurrently, the commit raises
-        :class:`CommitConflictError` and this method REBASES once: inputs
-        are immutable and the append only added files, so re-committing
-        the same (added, removed) delta against the new parent is sound —
-        exactly Iceberg's optimistic-retry path (iceberg_storage.rs:360-374).
+        Concurrency is :meth:`_commit_rewrite`'s one rule: a racing
+        append is absorbed by rebasing the same (added, removed) delta
+        once; a racing commit that removed an input or tombstoned rows
+        in one raises :class:`CommitConflictError`.
         """
         expected_parent = self.latest_version()
         scope = set(partitions) if partitions is not None else None
@@ -2667,87 +2634,47 @@ class EventTable:
                 "files_rewritten": 0,
                 "noop": True,
             }
-        added: list[dict] = []
-        all_paths: list[str] = []
-        if candidates:
-            # ONE Spark job rewrites every candidate partition (a per-
-            # partition loop of jobs would serialize at scale): read all
-            # inputs with partition columns from the layout, shuffle once
-            # on the storage key, write sorted into a staging tree, then
-            # move the rewritten files in.
-            all_paths = [f["file_path"] for fs in candidates.values() for f in fs]
-            # merge-on-read migration: the rewrite applies every active
-            # position tombstone (NOT applying them would resurrect
-            # taken-down rows into the compacted files), and delete files
-            # fully consumed by this rewrite are dropped in the commit —
-            # compaction is how merge-on-read deletes become pure data
-            active_dels = self._active_delete_files(expected_parent)
-            df = self._apply_position_deletes(
-                self._read_file_list(all_paths), active_dels
-            )
-            staging = os.path.join(self.path, f".compact-{uuid.uuid4().hex}")
-            # task count: each storage partition hashes to exactly ONE
-            # shuffle partition, so one-task-per-candidate just multiplies
-            # scheduling overhead (measured: 720 single-dir tasks ≈ 9s,
-            # defaultParallelism tasks ≈ 2s for the same 720 output files);
-            # cap at the candidate count so tiny compactions don't spawn
-            # empty tasks
-            ntasks = max(min(len(candidates), self.spark.sparkContext.defaultParallelism), 1)
-            # compacted files keep the bloom filters the originals carried
-            # (a compaction that silently drops D2's probe acceleration
-            # would regress every later dedup scan) — but an all-null key
-            # column gets none: when every input's footer stats prove the
-            # keys are all null, skip the bloom entirely (the same rule
-            # append applies via its batch NDV probe; building 720 bloom
-            # filters for zero keys was a measured ~1s of compact time)
-            inputs = [f for fs in candidates.values() for f in fs]
-            all_unkeyed = all("key_nulls" in f for f in inputs) and sum(
-                f["key_nulls"] for f in inputs
-            ) == sum(f.get("row_count", 0) for f in inputs)
-            # thin-output heuristic from manifest stats (no extra job):
-            # tiny compacted files shouldn't each allocate the default
-            # 128 MB row-group buffer — and the unkeyed-tiny combination
-            # routes to the Arrow writer like append's
-            max_part_rows = max(
-                (sum(f.get("row_count", 0) for f in fs) for fs in candidates.values()),
-                default=0,
-            )
-            cap = None
-            if target_files_per_partition > 1:
-                # hash partitioning can never split one storage partition
-                # across tasks — file splitting is the writer's job: roll
-                # over at rows(largest candidate) / target
-                biggest = max(
-                    sum(f.get("row_count", 0) for f in fs) for fs in candidates.values()
-                )
-                if biggest:
-                    cap = max(-(-biggest // target_files_per_partition), 1)
-            from zombi_spark.table.clustering import clustering_sort_columns
+        # ONE Spark job rewrites every candidate partition (a per-
+        # partition loop of jobs would serialize at scale): read all
+        # inputs with partition columns from the layout, shuffle once on
+        # the storage key, write sorted into a staging tree, then move
+        # the rewritten files in.
+        inputs = [f for fs in candidates.values() for f in fs]
+        all_paths = [f["file_path"] for f in inputs]
+        # merge-on-read migration: the rewrite applies every active
+        # position tombstone (NOT applying them would resurrect
+        # taken-down rows into the compacted files); the commit drops the
+        # delete files it fully consumes — compaction is how
+        # merge-on-read deletes become pure data
+        active_dels = self._active_delete_files(expected_parent)
+        df = self._apply_position_deletes(self._read_file_list(all_paths), active_dels)
+        shape = self._rewrite_shape(inputs)
+        cap = None
+        if target_files_per_partition > 1 and shape["rows_per_dir"]:
+            # hash partitioning can never split one storage partition
+            # across tasks — file splitting is the writer's job: roll
+            # over at rows(largest candidate) / target
+            cap = max(-(-shape["rows_per_dir"] // target_files_per_partition), 1)
+        from zombi_spark.table.clustering import clustering_sort_columns
 
-            stat_kinds = self.extracted_stat_columns()
-            order = clustering_sort_columns(
-                df,
-                strategy,
-                sort_columns,
-                tuple(n for n, k in stat_kinds.items() if k == "int"),
-                tuple(n for n, k in stat_kinds.items() if k != "int"),
-            )
-            wstats = self._write_staged(
-                df.repartition(ntasks, "event_date", "event_hour")
-                .sortWithinPartitions("event_date", "event_hour", *order),
-                staging,
-                expected_ndv=0
-                if all_unkeyed
-                else self._target_records_per_file(128 * 1024 * 1024),
-                tiny=0 < max_part_rows < 100_000,
-                cap=cap,
-            )
-            added = self._move_staged_in(staging, prefix="compacted-", stats=wstats)
-            self._rmtree(staging)
-        prior = self.latest_snapshot()
+        stat_kinds = self.extracted_stat_columns()
+        order = clustering_sort_columns(
+            df,
+            strategy,
+            sort_columns,
+            tuple(n for n, k in stat_kinds.items() if k == "int"),
+            tuple(n for n, k in stat_kinds.items() if k != "int"),
+        )
+        added = self._stage_and_move(
+            df,
+            self._staging_dir("compact"),
+            cap=cap,
+            order=order,
+            prefix="compacted-",
+            **shape,
+        )
         summary = {
             "operation": "compact",
-            "watermarks": dict(prior.get("watermarks", {})) if prior else {},
             "partitions": sorted(candidates),
             "files_rewritten": len(all_paths),
         }
@@ -2761,50 +2688,13 @@ class EventTable:
             summary["scoped"] = True
         if extra_summary:
             summary.update(extra_summary)
-        # position-delete files fully consumed by this rewrite (every
-        # referenced data file is among the inputs) leave the manifest
-        # with the same commit — their tombstones were applied above
-        consumed = [
-            d["file_path"]
-            for d in active_dels
-            if d.get("referenced_files")
-            and set(d["referenced_files"]) <= set(all_paths)
-        ]
-        try:
-            snap = self._commit_snapshot(
-                summary,
-                added=added,
-                removed=all_paths,
-                expected_parent=expected_parent,
-                removed_deletes=consumed,
-            )
-        except CommitConflictError:
-            # rebase once: inputs are immutable, so the delta re-applies
-            # cleanly on the new parent — unless another compact already
-            # removed one of our inputs, in which case abort (our rewrite
-            # files become orphans for remove_orphans to reap)
-            new_parent = self.latest_version()
-            active = {e["file_path"] for e in self._active_files(new_parent)}
-            if not set(all_paths) <= active:
-                raise
-            # a merge-on-read delete that landed on our inputs AFTER we
-            # read them means our rewrite predates its tombstones —
-            # committing would resurrect the taken-down rows: abort
-            applied = {d["file_path"] for d in active_dels}
-            for d in self._active_delete_files(new_parent):
-                if d["file_path"] not in applied and set(
-                    d.get("referenced_files", [])
-                ) & set(all_paths):
-                    raise
-            prior = self.latest_snapshot()
-            summary["watermarks"] = dict(prior.get("watermarks", {})) if prior else {}
-            snap = self._commit_snapshot(
-                summary,
-                added=added,
-                removed=all_paths,
-                expected_parent=new_parent,
-                removed_deletes=consumed,
-            )
+        snap = self._commit_rewrite(
+            summary,
+            planned=expected_parent,
+            planned_deletes=active_dels,
+            added=added,
+            removed=all_paths,
+        )
         # ---- commit point passed: NOW the inputs may be physically
         # deleted. They remain referenced by older snapshots, so delete
         # only what expiration has already released; until then they stay

@@ -44,6 +44,7 @@ from a fresh cursor.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
@@ -496,7 +497,11 @@ def _referenced_avro(meta: dict) -> set[str]:
                     for mf in MF.read_manifest_list(ml):
                         refs.add(os.path.abspath(mf["manifest_path"]))
                 except Exception:
-                    pass
+                    # the list path still counts; its manifests go
+                    # unprotected by this snapshot, so say so
+                    logging.getLogger(__name__).warning(
+                        "unreadable manifest list %r", ml, exc_info=True
+                    )
     return refs
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 import os
 import time
 
-from zombi_spark.table.event_table import EventTable
+from zombi_spark.table.event_table import STAGING_PREFIXES, EventTable
 
 
 def table_stats(table: EventTable, snaps: list[dict] | None = None) -> dict:
@@ -91,14 +91,14 @@ def pending_stats(table: EventTable) -> dict:
     count + size of pending data files, totals and per partition dir).
 
     "Pending" here = parquet visible on disk but referenced by no
-    snapshot: in-flight staging trees (``.append-*``/``.compact-*``) and
+    snapshot: in-flight staging trees (``STAGING_PREFIXES``) and
     moved-but-uncommitted data files (a crashed append's leftovers, the
     exact set :meth:`EventTable.remove_orphans` would reclaim). Pure
     filesystem metadata — no data file is opened."""
     staged: list[tuple[str, int]] = []
     if os.path.isdir(table.path):
         for entry in os.listdir(table.path):
-            if entry.startswith((".append-", ".compact-")):
+            if entry.startswith(STAGING_PREFIXES):
                 stage_root = os.path.join(table.path, entry)
                 for dirpath, _dirs, files in os.walk(stage_root):
                     for f in files:
