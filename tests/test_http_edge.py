@@ -441,7 +441,7 @@ def test_multiprocess_write_plane(spark, tmp_path):
             )
         return ingests[name]
 
-    with HttpIngestEdge(resolver, workers=2, combine_max_wait_ms=2.0) as srv:
+    with HttpIngestEdge(resolver, workers=2) as srv:
         host, port = srv._httpd.server_address[:2]
         # fresh connection per request → the kernel spreads connections
         # across the 3 listeners (parent + 2 workers)
@@ -620,7 +620,7 @@ def test_worker_sigkill_loses_no_acked_writes(spark, tmp_path):
                 time.sleep(0.1)
         return False
 
-    with HttpIngestEdge(resolver, workers=2, combine_max_wait_ms=2.0) as srv:
+    with HttpIngestEdge(resolver, workers=2) as srv:
         host, port = srv._httpd.server_address[:2]
         acked = [f"pre-{i}" for i in range(30) if post_event(host, port, f"pre-{i}")]
         victim = srv._worker_procs[0][0]
@@ -693,48 +693,47 @@ def test_retention_over_http(edge):
     assert ingests["aged"].table.read().count() == 2
 
 
+def _raw_request(host, port, request: bytes):
+    """Send ``request`` verbatim on a fresh connection → (status, body)."""
+    import http.client
+
+    conn = http.client.HTTPConnection(host, port, timeout=30)
+    conn.connect()
+    conn.sock.sendall(request)
+    resp = http.client.HTTPResponse(conn.sock, method="POST")
+    resp.begin()
+    body = resp.read()
+    conn.close()
+    return resp.status, body
+
+
+def _assert_bad_framing_refused(host, port, path: str):
+    """Bad/negative Content-Length → 400, over-cap → 413 WITHOUT
+    buffering, chunked → 501 — each answered within the socket timeout
+    (the shared request layer of the edge and the REST catalog)."""
+    head = f"POST {path} HTTP/1.1\r\nHost: x\r\n".encode()
+    # non-numeric Content-Length
+    assert _raw_request(host, port, head + b"Content-Length: abc\r\n\r\n")[0] == 400
+    # negative Content-Length (rfile.read(-1) would block forever)
+    assert _raw_request(host, port, head + b"Content-Length: -1\r\n\r\n")[0] == 400
+    # oversized: refused from the header alone, nothing buffered
+    assert _raw_request(host, port, head + b"Content-Length: 99999999999\r\n\r\n")[0] == 413
+    # chunked transfer encoding: explicit 501, not silent desync
+    status, _ = _raw_request(
+        host, port, head + b"Transfer-Encoding: chunked\r\n\r\n5\r\nhello\r\n0\r\n\r\n"
+    )
+    assert status == 501
+
+
 def test_body_framing_protections(edge):
     """Malformed framing must answer an error and close the connection,
     never hang a thread or desync keep-alive: bad/negative
     Content-Length → 400, over-cap → 413 WITHOUT buffering, chunked →
     501; an out-of-int32 partition → 400 instead of a 202 whose row the
     landing-schema read would silently null."""
-    import http.client
-
     srv, _ = edge
     host, port = srv._httpd.server_address[:2]
-
-    def raw_post(headers_body: bytes):
-        conn = http.client.HTTPConnection(host, port, timeout=30)
-        conn.connect()
-        conn.sock.sendall(headers_body)
-        resp = http.client.HTTPResponse(conn.sock, method="POST")
-        resp.begin()
-        body = resp.read()
-        conn.close()
-        return resp.status, body
-
-    # non-numeric Content-Length
-    status, _ = raw_post(
-        b"POST /tables/events HTTP/1.1\r\nHost: x\r\nContent-Length: abc\r\n\r\n"
-    )
-    assert status == 400
-    # negative Content-Length (rfile.read(-1) would block forever)
-    status, _ = raw_post(
-        b"POST /tables/events HTTP/1.1\r\nHost: x\r\nContent-Length: -1\r\n\r\n"
-    )
-    assert status == 400
-    # oversized: refused from the header alone, nothing buffered
-    status, _ = raw_post(
-        b"POST /tables/events HTTP/1.1\r\nHost: x\r\nContent-Length: 99999999999\r\n\r\n"
-    )
-    assert status == 413
-    # chunked transfer encoding: explicit 501, not silent desync
-    status, _ = raw_post(
-        b"POST /tables/events HTTP/1.1\r\nHost: x\r\n"
-        b"Transfer-Encoding: chunked\r\n\r\n5\r\nhello\r\n0\r\n\r\n"
-    )
-    assert status == 501
+    _assert_bad_framing_refused(host, port, "/tables/events")
 
     # partition past int32 → 400 (the protobuf decoder's rule, applied
     # to the JSON path too)
@@ -753,6 +752,36 @@ def test_body_framing_protections(edge):
     # tail limit is capped (the collect lands on the serving process)
     status, body = _call(f"http://{host}:{port}/tables/events?limit=100000000")
     assert status == 400 and "limit" in body["error"]["message"]
+
+
+def test_catalog_body_framing_and_keep_alive(tmp_path):
+    """The REST catalog answers malformed framing like the edge, and an
+    error reply or a GET with a body leaves the keep-alive connection
+    usable (the next request is answered, not parsed out of the unread
+    body)."""
+    import http.client
+
+    from zombi_spark.table.catalog import Catalog
+    from zombi_spark.table.rest_catalog import RestCatalogServer
+
+    with RestCatalogServer(Catalog(None, str(tmp_path))) as srv:
+        host, port = srv._httpd.server_address[:2]
+        _assert_bad_framing_refused(host, port, "/catalog/v1/namespaces/zombi/tables")
+        conn = http.client.HTTPConnection(host, port, timeout=30)
+        conn.request("POST", "/catalog/v1/namespaces/ghost/tables", b'{"name": "hello"}')
+        r = conn.getresponse()
+        assert r.status == 404 and json.loads(r.read())["error"]["code"] == 404
+        conn.request("GET", "/catalog/v1/config")
+        r = conn.getresponse()
+        assert r.status == 200 and json.loads(r.read())["overrides"]["warehouse"]
+        conn.request("GET", "/catalog/v1/namespaces", body=b"hello")
+        r = conn.getresponse()
+        assert r.status == 200 and json.loads(r.read()) == {"namespaces": [["zombi"]]}
+        conn.request("GET", "/catalog/v1/config")
+        r = conn.getresponse()
+        assert r.status == 200
+        r.read()
+        conn.close()
 
 
 def test_latency_histograms_streaming_semantics():
@@ -846,7 +875,7 @@ def test_multiprocess_latency_histograms_are_plane_wide(spark, tmp_path):
             )
         return ingests[name]
 
-    with HttpIngestEdge(resolver, workers=2, combine_max_wait_ms=2.0) as srv:
+    with HttpIngestEdge(resolver, workers=2) as srv:
         host, port = srv._httpd.server_address[:2]
         pids = set()
         for i in range(20):
@@ -914,6 +943,23 @@ def test_resolver_failure_answers_500_not_a_slammed_socket(spark, tmp_path):
         )
     assert status == 500 and "catalog is on fire" in body["error"]["message"]
     assert calls["n"] >= 1
+
+
+def test_worker_resolve_with_parent_down_is_a_retryable_502():
+    """A write-plane worker whose parent cannot be reached answers the
+    first write to an uncached table with a retryable 502 (the worker
+    itself is fine), not the 500 of an unexpected failure."""
+    import socket
+
+    from zombi_spark.http_handler import HttpError
+    from zombi_spark.streaming.http_edge import _WorkerState
+
+    with socket.socket() as s:  # a port nothing listens on once closed
+        s.bind(("127.0.0.1", 0))
+        dead = s.getsockname()
+    with pytest.raises(HttpError) as exc:
+        _WorkerState(dead).zone_for("events")
+    assert exc.value.status == 502 and "query plane unavailable" in exc.value.message
 
 
 def test_row_delete_over_http(edge):

@@ -187,7 +187,9 @@ def test_writer_routing_arrow_for_unkeyed_tiny_jvm_for_keyed(spark, tmp_path):
     """The many-small-files Arrow fast path routes precisely: UNKEYED
     wide-time-range batches (no bloom filter to write) go through the
     pyarrow writer; KEYED batches stay on parquet-mr, which writes the
-    idempotency-key bloom filter the dedup anti-join probes. Both file
+    idempotency-key bloom filter that key-equality and IN deletes read
+    (the dedup anti-join pushes no key value down, so it never reads
+    the bloom). Both file
     populations must read back identically through the table, and the
     keyed files must actually carry the bloom."""
     import pyarrow.parquet as pq

@@ -55,13 +55,17 @@ assigned at micro-batch commit — the freshness contract of a micro-batch
 engine (SURVEY §7 "what's hard"). ``GET`` serves committed + hot rows
 through :meth:`StreamingIngest.tail`.
 
-stdlib ``ThreadingHTTPServer`` like the REST catalog (no web framework
-ships in this container); Spark is touched only by GET/flush — the write
-path is pure filesystem work and stays sub-millisecond.
+stdlib ``ThreadingHTTPServer`` like the REST catalog, over the request
+layer the two share (:mod:`zombi_spark.http_handler` — keep-alive, body
+framing, one error dispatch); this module keeps only the routes and the
+``{"error": {"message", "code"}}`` body. Spark is touched only by
+GET/flush — the write path is pure filesystem work and stays
+sub-millisecond.
 """
 
 from __future__ import annotations
 
+import contextlib
 import http.client
 import json
 import multiprocessing
@@ -73,8 +77,9 @@ import threading
 import time
 import urllib.parse
 import uuid
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import ThreadingHTTPServer
 
+from zombi_spark.http_handler import HttpError, JsonHandler
 from zombi_spark.ingest.batch import validate_table_name
 from zombi_spark.ingest.protobuf import (
     ProtoDecodeError,
@@ -95,12 +100,6 @@ _KNOWN_FIELDS = (
     "committed",
 )
 _DEFAULT_FIELDS = ("payload", "timestamp_ms")
-
-
-def _err(status: int, message: str) -> tuple[int, dict]:
-    return status, {"error": {"message": message, "code": status}}
-
-
 _ARROW_MEDIA = "application/vnd.apache.arrow.stream"
 
 
@@ -128,59 +127,70 @@ def negotiate_format(accept_header: str) -> str:
     return negotiate_output_format(accept_header)
 
 
-class _Handler(BaseHTTPRequestHandler):
+@contextlib.contextmanager
+def _maintenance(ing, table: str, action: str = "maintenance"):
+    """One maintenance action per table at a time — a concurrent request
+    gets 409, the reference's in-progress contract (compaction.rs:98-137);
+    two drains would also collide on the shared streaming checkpoint."""
+    if not ing.maintenance_lock.acquire(blocking=False):
+        raise HttpError(409, f"{action} already in progress for {table}")
+    try:
+        yield
+    finally:
+        ing.maintenance_lock.release()
+
+
+def _drain(ing, timeout_message: str) -> None:
+    """Drain the landing zone into the table (availableNow run, blocks).
+    Past 600 s never report durability that hasn't happened, and never
+    release the maintenance lock with the query still running (a second
+    drain would collide on the checkpoint): stop it first, then 504."""
+    q = ing.start(available_now=True)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise HttpError(504, timeout_message)
+
+
+class _Handler(JsonHandler):
     server_version = "zombi-spark-edge/1.0"
-    protocol_version = "HTTP/1.1"
-    # keep-alive + Nagle + tiny unbuffered writes = the classic 40 ms
-    # delayed-ACK stall (~25 req/s per connection); TCP_NODELAY plus a
-    # buffered writer sends each response as one segment
-    disable_nagle_algorithm = True
-    wbufsize = 64 * 1024
 
-    def log_message(self, *args) -> None:  # quiet under pytest
-        pass
+    def error_body(self, status: int, message: str) -> dict:
+        return {"error": {"message": message, "code": status}}
 
-    # ------------------------------------------------------------ plumbing
-    def _ingest(self, table: str, create: bool = True) -> StreamingIngest:
-        """Resolve the table's ingest. Writes create lazily (the S1
-        contract, handlers.rs:1287); READS must not fabricate state —
-        the resolver raises KeyError for unknown tables when
-        ``create=False`` and the caller 404s."""
-        return self.server.resolver(table, create)  # type: ignore[attr-defined]
-
-    def _combiner(self, table: str) -> WriteCombiner | None:
-        return self.server.combiner_for(table)  # type: ignore[attr-defined]
-
-    def _send_json(self, obj, status: int = 200) -> None:
-        if status >= 400:
-            self.server.counters.count_error()  # type: ignore[attr-defined]
-        self._send_bytes(json.dumps(obj).encode(), "application/json", status)
-
-    def _send_err(self, status: int, message: str) -> None:
-        st, body = _err(status, message)
-        self._send_json(body, st)
-
-    def _send_bytes(
+    def send_bytes(
         self,
         payload: bytes,
         content_type: str,
         status: int = 200,
-        extra_headers: dict | None = None,
+        headers: dict | None = None,
     ) -> None:
-        self.send_response(status)
-        self.send_header("Content-Type", content_type)
-        self.send_header("Content-Length", str(len(payload)))
+        if status >= 400:
+            self.server.counters.count_error()  # type: ignore[attr-defined]
         # which process served this — observable proof the multi-process
         # write plane is actually spreading load (and a debugging aid)
-        self.send_header("X-Edge-Pid", str(os.getpid()))
-        for k, v in (extra_headers or {}).items():
-            self.send_header(k, v)
-        self._responded = True
-        self.end_headers()
-        self.wfile.write(payload)
-        # release the request body: a keep-alive connection idling after
-        # a large bulk POST must not pin megabytes on its handler slot
-        self._raw_body = b""
+        headers = {"X-Edge-Pid": str(os.getpid()), **(headers or {})}
+        super().send_bytes(payload, content_type, status, headers)
+
+    def do_GET(self) -> None:  # noqa: N802 (http.server API)
+        self.dispatch(self._get)
+
+    def do_POST(self) -> None:  # noqa: N802
+        self.dispatch(self._post)
+
+    # ------------------------------------------------------------ plumbing
+    def _ingest(self, name, create: bool = False) -> StreamingIngest:
+        """Table name → its ingest; 400 for an invalid name. Writes create
+        lazily (the S1 contract, handlers.rs:1287); reads and maintenance
+        must not fabricate state — the resolver raises KeyError for an
+        unknown table when ``create`` is False, answered 404."""
+        try:
+            table = validate_table_name(name)
+        except (ValueError, TypeError) as exc:
+            raise HttpError(400, str(exc)) from None
+        try:
+            return self.server.resolver(table, create)  # type: ignore[attr-defined]
+        except KeyError:
+            raise HttpError(404, f"table {table} not found") from None
 
     def _route(self) -> tuple[list[str], dict]:
         u = urllib.parse.urlparse(self.path)
@@ -195,63 +205,6 @@ class _Handler(BaseHTTPRequestHandler):
         query = {k: v[0] for k, v in urllib.parse.parse_qs(u.query).items()}
         return parts, query
 
-    # the reference bounds in-flight request bytes with its 64 MB
-    # semaphore (handlers.rs:64-232) — the same cap here guards the
-    # buffered read; admission control only counts already-LANDED files
-    _MAX_BODY_BYTES = 64 * 1024 * 1024
-
-    def _drain_body(self) -> None:
-        # the body must be consumed exactly once per request BEFORE any
-        # response is written: on an HTTP/1.1 keep-alive connection an
-        # unread body would be parsed as the NEXT request line, desyncing
-        # the stream (a 400 on a bad table name used to leave the body in
-        # rfile and poison the connection). Called at handler entry —
-        # handler INSTANCES live for the whole connection, so the slot is
-        # overwritten per request, never cached across them.
-        #
-        # Malformed framing can't be drained and MUST close the
-        # connection (the bytes left in rfile would poison it):
-        # ``_body_error`` carries the status the route answers first.
-        self._raw_body = b""
-        self._body_error: tuple[int, str] | None = None
-        if self.headers.get("Transfer-Encoding"):
-            # we only speak Content-Length framing; silently ignoring a
-            # chunked body would desync every later request
-            self._body_error = (501, "chunked transfer encoding not supported")
-            self.close_connection = True
-            return
-        raw_len = self.headers.get("Content-Length", "0")
-        try:
-            n = int(raw_len)
-        except ValueError:
-            self._body_error = (400, f"invalid Content-Length {raw_len!r}")
-            self.close_connection = True
-            return
-        if n < 0:
-            # rfile.read(-1) would block until the peer closes — a
-            # permanently pinned handler thread per such request
-            self._body_error = (400, f"invalid Content-Length {n}")
-            self.close_connection = True
-            return
-        if n > self._MAX_BODY_BYTES:
-            # refuse WITHOUT reading: buffering an attacker-chosen size
-            # is the OOM, not the landing
-            self._body_error = (413, f"body of {n} B exceeds {self._MAX_BODY_BYTES} B cap")
-            self.close_connection = True
-            return
-        self._raw_body = self.rfile.read(n)
-
-    def _reject_bad_body(self) -> bool:
-        """Answer the framing error recorded by :meth:`_drain_body` (and
-        close the now-undrainable connection). True = request handled."""
-        if self._body_error is not None:
-            self._send_err(*self._body_error)
-            return True
-        return False
-
-    def _body(self) -> bytes:
-        return self._raw_body
-
     def _is_proto(self) -> bool:
         return self.headers.get("Content-Type", "").startswith("application/x-protobuf")
 
@@ -262,13 +215,13 @@ class _Handler(BaseHTTPRequestHandler):
         X-Partition header for protobuf)."""
         now_ms = int(time.time() * 1000)
         if self._is_proto():
-            ev = decode_event(self._body())  # ProtoDecodeError → 400
+            ev = decode_event(self.body)  # ProtoDecodeError → 400
             partition = _parse_partition(self.headers.get("X-Partition", 0))
             payload = ev["payload"]
             ts = ev["timestamp_ms"] if ev["timestamp_ms"] is not None else now_ms
             key = ev["idempotency_key"]
         else:
-            body = json.loads(self._body() or b"{}")
+            body = json.loads(self.body or b"{}")
             if not isinstance(body, dict) or body.get("payload") is None:
                 # key-present-but-null would 202-ack a row whose content
                 # is gone while the Iceberg schema declares payload
@@ -290,7 +243,7 @@ class _Handler(BaseHTTPRequestHandler):
     def _parse_bulk(self) -> list[dict]:
         now_ms = int(time.time() * 1000)
         if self._is_proto():
-            records = decode_bulk_write_request(self._body())
+            records = decode_bulk_write_request(self.body)
             if not records:  # same contract as the JSON branch
                 raise ValueError("bulk request decoded to zero records")
             out = []
@@ -304,7 +257,7 @@ class _Handler(BaseHTTPRequestHandler):
                     }
                 )
             return out
-        body = json.loads(self._body() or b"{}")
+        body = json.loads(self.body or b"{}")
         records = body.get("records") if isinstance(body, dict) else None
         if not isinstance(records, list) or not records:
             raise ValueError("body must carry a non-empty 'records' array")
@@ -322,28 +275,7 @@ class _Handler(BaseHTTPRequestHandler):
             )
         return out
 
-    def do_POST(self) -> None:  # noqa: N802 (http.server API)
-        # envelope-of-last-resort, same as do_GET: table resolution and
-        # the consumer-commit route run OUTSIDE the per-action try blocks
-        # below, and a resolver/IO failure there must answer 500, never
-        # slam the socket with no response
-        self._responded = False
-        try:
-            self._do_post()
-        except Exception as exc:  # noqa: BLE001
-            if not self._responded:
-                import contextlib as _ctx
-
-                with _ctx.suppress(OSError):
-                    status, body = _err(500, f"{type(exc).__name__}: {exc}")
-                    self._send_json(body, status)
-            else:
-                self.close_connection = True
-
-    def _do_post(self) -> None:
-        self._drain_body()
-        if self._reject_bad_body():
-            return
+    def _post(self) -> None:
         parts, _q = self._route()
         if parts == ["internal", "resolve"] and getattr(self.server, "is_internal", False):
             # control-plane route (internal listener only): an edge
@@ -351,23 +283,14 @@ class _Handler(BaseHTTPRequestHandler):
             # landing zone — lazy table creation stays on the parent, the
             # worker gets back pure paths it can write without Spark
             try:
-                req = json.loads(self._body() or b"{}")
-                table = validate_table_name(req["table"])
-                ing = self._ingest(table, create=bool(req.get("create", True)))
-            except KeyError:
-                status, body = _err(404, "table not found")
-                self._send_json(body, status)
-                return
-            except (ValueError, TypeError) as exc:
-                status, body = _err(400, str(exc))
-                self._send_json(body, status)
-                return
-            except Exception as exc:  # noqa: BLE001 — resolver blew up
-                self._send_err(500, f"{type(exc).__name__}: {exc}")
-                return
-            self._send_json(
+                req = json.loads(self.body or b"{}")
+                name, create = req["table"], bool(req.get("create", True))
+            except (ValueError, KeyError, TypeError) as exc:
+                raise HttpError(400, f"body must carry 'table': {exc}") from None
+            ing = self._ingest(name, create)
+            self.send_json(
                 {
-                    "table": table,
+                    "table": name,
                     "landing_dir": ing.landing_dir,
                     "checkpoint_dir": ing.checkpoint_dir,
                     "byte_budget": ing.landing_byte_budget,
@@ -383,42 +306,23 @@ class _Handler(BaseHTTPRequestHandler):
 
             group = parts[1]
             try:
-                body = json.loads(self._body() or b"{}")
-                topic = validate_table_name(body["topic"])
+                body = json.loads(self.body or b"{}")
+                topic = body["topic"]
                 partition, offset = int(body["partition"]), int(body["offset"])
             except (ValueError, KeyError, TypeError) as exc:
-                status, payload = _err(400, f"body must carry topic/partition/offset: {exc}")
-                self._send_json(payload, status)
-                return
-            try:
-                ing = self._ingest(topic, create=False)
-            except KeyError:
-                status, payload = _err(404, f"table {topic} not found")
-                self._send_json(payload, status)
-                return
+                raise HttpError(400, f"body must carry topic/partition/offset: {exc}") from None
+            ing = self._ingest(topic)
             ConsumerOffsets(ing.table.path).commit(group, partition, offset)
-            self._send_json(
+            self.send_json(
                 {"group": group, "topic": topic, "partition": partition, "offset": offset}
             )
             return
         if len(parts) not in (2, 3) or parts[0] != "tables":
-            status, body = _err(404, "no such route")
-            self._send_json(body, status)
-            return
-        try:
-            table = validate_table_name(parts[1])
-        except ValueError as exc:
-            status, body = _err(400, str(exc))
-            self._send_json(body, status)
-            return
+            raise HttpError(404, "no such route")
+        table = parts[1]
         action = parts[2] if len(parts) == 3 else None
         # writes create lazily; maintenance actions on unknown tables 404
-        try:
-            ing = self._ingest(table, create=action in (None, "bulk"))
-        except KeyError:
-            status, body = _err(404, f"table {table} not found")
-            self._send_json(body, status)
-            return
+        ing = self._ingest(table, create=action in (None, "bulk"))
         try:
             if action is None or action == "bulk":
                 _t0 = time.perf_counter()
@@ -427,11 +331,10 @@ class _Handler(BaseHTTPRequestHandler):
                 for i, e in enumerate(events):
                     e["topic"] = table
                     e["ingest_order"] = order_base + i
-                combiner = self._combiner(table)
-                if action is None and combiner is not None:
+                if action is None:
                     # S4 combined path: ack after the combined batch
                     # lands (per-event oneshot semantics)
-                    combiner.submit(events[0])
+                    self.server.combiner_for(table).submit(events[0])  # type: ignore[attr-defined]
                     landed = None
                 else:
                     # bulk requests are already a batch: land directly
@@ -440,300 +343,174 @@ class _Handler(BaseHTTPRequestHandler):
                 # increments writes_total on success, handlers.rs:1081)
                 self.server.counters.count_write(  # type: ignore[attr-defined]
                     len(events),
-                    len(self._body()),
+                    len(self.body),
                     latency_us=int((time.perf_counter() - _t0) * 1e6),
                 )
-                self._send_json(
+                self.send_json(
                     {"table": table, "count": len(events), "landed": landed, "accepted": True},
                     202,
                 )
-            elif action in ("flush", "compact"):
-                # one maintenance action per table at a time — concurrent
-                # requests get 409, the reference's in-progress contract
-                # (compaction.rs:98-137); two drains would also collide
-                # on the shared streaming checkpoint
-                if not ing.maintenance_lock.acquire(blocking=False):
-                    status, body = _err(409, f"{action} already in progress for {table}")
-                    self._send_json(body, status)
-                    return
-                try:
-                    if action == "flush":
-                        _f0 = time.perf_counter()
-                        q = ing.start(available_now=True)
-                        finished = q.awaitTermination(600)
-                        if not finished:
-                            # never report durability that hasn't happened,
-                            # and never release the lock with the query
-                            # still running (a second flush would collide
-                            # on the checkpoint): stop it first, then 504
-                            q.stop()
-                            status, body = _err(
-                                504,
-                                "flush did not drain within 600s; the run was "
-                                "stopped — committed batches are durable, "
-                                "retry to continue draining",
-                            )
-                            self._send_json(body, status)
-                            return
-                        self.server.counters.flush_duration_us.observe(  # type: ignore[attr-defined]
-                            int((time.perf_counter() - _f0) * 1e6)
-                        )
-                        self._send_json({"table": table, "flushed": True})
-                    else:
-                        # M1 over HTTP (handlers.rs:1379-1408);
-                        # min_input_files mirrors CompactionConfig.
-                        # strategy/sort_columns/rewrite_all expose the
-                        # r13 clustered-rewrite surface (the
-                        # rewrite_data_files strategy params); validation
-                        # errors map to 400, not 500
-                        try:
-                            result = ing.table.compact(
-                                min_input_files=int(_q.get("min_input_files", 3)),
-                                strategy=_q.get("strategy", "binpack"),
-                                sort_columns=(
-                                    _q["sort_columns"].split(",")
-                                    if "sort_columns" in _q
-                                    else None
-                                ),
-                                rewrite_all=_q.get("rewrite_all", "") == "true",
-                                target_files_per_partition=int(
-                                    _q.get("target_files_per_partition", 1)
-                                ),
-                                # r14 partition scoping (incremental
-                                # maintenance): comma-separated storage
-                                # partition dirs, e.g.
-                                # partitions=event_date=.../event_hour=0
-                                partitions=(
-                                    _q["partitions"].split(",")
-                                    if "partitions" in _q
-                                    else None
-                                ),
-                            )
-                        except ValueError as exc:
-                            status, body = _err(400, str(exc))
-                            self._send_json(body, status)
-                            return
-                        self._send_json(
-                            {
-                                "table": table,
-                                "files_rewritten": result.get("files_rewritten", 0),
-                                "partitions": result.get("partitions", []),
-                                "version": result.get("version"),
-                            }
-                        )
-                finally:
-                    ing.maintenance_lock.release()
+            elif action == "flush":
+                with _maintenance(ing, table, action):
+                    _f0 = time.perf_counter()
+                    _drain(
+                        ing,
+                        "flush did not drain within 600s; the run was "
+                        "stopped — committed batches are durable, "
+                        "retry to continue draining",
+                    )
+                    self.server.counters.flush_duration_us.observe(  # type: ignore[attr-defined]
+                        int((time.perf_counter() - _f0) * 1e6)
+                    )
+                self.send_json({"table": table, "flushed": True})
+            elif action == "compact":
+                # M1 over HTTP (handlers.rs:1379-1408); min_input_files
+                # mirrors CompactionConfig. strategy/sort_columns/
+                # rewrite_all expose the r13 clustered-rewrite surface (the
+                # rewrite_data_files strategy params); validation errors
+                # map to 400, not 500
+                with _maintenance(ing, table, action):
+                    result = ing.table.compact(
+                        min_input_files=int(_q.get("min_input_files", 3)),
+                        strategy=_q.get("strategy", "binpack"),
+                        sort_columns=(
+                            _q["sort_columns"].split(",")
+                            if "sort_columns" in _q
+                            else None
+                        ),
+                        rewrite_all=_q.get("rewrite_all", "") == "true",
+                        target_files_per_partition=int(
+                            _q.get("target_files_per_partition", 1)
+                        ),
+                        # r14 partition scoping (incremental maintenance):
+                        # comma-separated storage partition dirs, e.g.
+                        # partitions=event_date=.../event_hour=0
+                        partitions=(
+                            _q["partitions"].split(",")
+                            if "partitions" in _q
+                            else None
+                        ),
+                    )
+                self.send_json(
+                    {
+                        "table": table,
+                        "files_rewritten": result.get("files_rewritten", 0),
+                        "partitions": result.get("partitions", []),
+                        "version": result.get("version"),
+                    }
+                )
             elif action == "retention":
                 # cold-tier retention over HTTP: metadata-only
-                # partition-aligned delete (same maintenance-lock
-                # contract as flush/compact/rollup)
+                # partition-aligned delete
                 try:
                     cutoff = int(_q["older_than_ms"])
                 except (KeyError, ValueError) as exc:
-                    status, body = _err(400, f"older_than_ms query param required: {exc}")
-                    self._send_json(body, status)
-                    return
-                if not ing.maintenance_lock.acquire(blocking=False):
-                    status, body = _err(409, f"maintenance already in progress for {table}")
-                    self._send_json(body, status)
-                    return
-                try:
+                    raise HttpError(400, f"older_than_ms query param required: {exc}") from None
+                with _maintenance(ing, table):
                     report = ing.table.expire_data_older_than(cutoff)
-                    self._send_json({"table": table, **report})
-                finally:
-                    ing.maintenance_lock.release()
+                self.send_json({"table": table, **report})
             elif action == "delete":
-                # row-level takedown over HTTP: structured selectors only
-                # (a raw predicate string over the wire would make the
-                # public edge a SQL endpoint); selectors AND together
-                body = self._body()
-                try:
-                    spec = json.loads(body) if body else {}
-                except json.JSONDecodeError as exc:
-                    status, body_ = _err(400, f"invalid JSON body: {exc}")
-                    self._send_json(body_, status)
-                    return
-                if not isinstance(spec, dict):
-                    status, body_ = _err(400, "body must be a JSON object")
-                    self._send_json(body_, status)
-                    return
-                allowed = {
-                    "idempotency_keys", "topic", "partition", "ts_min",
-                    "ts_max", "flush", "mode",
-                }
-                unknown = set(spec) - allowed
-                if unknown:
-                    status, body_ = _err(400, f"unknown selector(s): {sorted(unknown)}")
-                    self._send_json(body_, status)
-                    return
-                from pyspark.sql import functions as F
-
-                conds = []
-                # an empty list has always meant "no key filter" (same as
-                # omitting the selector) — keep that contract (ADVICE r7)
-                if spec.get("idempotency_keys"):
-                    ik = spec["idempotency_keys"]
-                    # a JSON string here would iterate character-by-character
-                    # into isin() — silently deleting nothing (or the wrong
-                    # single-char keys) on a takedown endpoint
-                    if not isinstance(ik, list) or not all(
-                        isinstance(k, (str, int)) and not isinstance(k, bool)
-                        for k in ik
-                    ):
-                        status, body_ = _err(
-                            400,
-                            "idempotency_keys must be a JSON array of "
-                            "strings or integers",
-                        )
-                        self._send_json(body_, status)
-                        return
-                    keys = [str(k) for k in ik]
-                    conds.append(F.col("idempotency_key").isin(keys))
-                elif "idempotency_keys" in spec and not isinstance(
-                    spec["idempotency_keys"], list
-                ):
-                    # truthiness must not mask a non-list (e.g. a non-empty
-                    # string slips past the guard above only if falsy)
-                    status, body_ = _err(
-                        400,
-                        "idempotency_keys must be a JSON array of "
-                        "strings or integers",
-                    )
-                    self._send_json(body_, status)
-                    return
-                if "topic" in spec:
-                    conds.append(F.col("topic") == str(spec["topic"]))
-                if "partition" in spec:
-                    conds.append(F.col("partition") == int(spec["partition"]))
-                if "ts_min" in spec:
-                    conds.append(F.col("timestamp_ms") >= int(spec["ts_min"]))
-                if "ts_max" in spec:
-                    conds.append(F.col("timestamp_ms") <= int(spec["ts_max"]))
-                if not conds:
-                    status, body_ = _err(
-                        400,
-                        "at least one selector required (idempotency_keys, "
-                        "topic, partition, ts_min, ts_max) — an unbounded "
-                        "delete must be expressed deliberately via retention",
-                    )
-                    self._send_json(body_, status)
-                    return
-                pred = conds[0]
-                for c in conds[1:]:
-                    pred = pred & c
-                if not ing.maintenance_lock.acquire(blocking=False):
-                    status, body_ = _err(409, f"maintenance already in progress for {table}")
-                    self._send_json(body_, status)
-                    return
-                try:
-                    if spec.get("flush", True):
-                        # takedown must also catch rows still in the hot
-                        # tier: drain the landing zone first so the doomed
-                        # rows are IN the table the delete rewrites
-                        q = ing.start(available_now=True)
-                        if not q.awaitTermination(600):
-                            q.stop()
-                            status, body_ = _err(
-                                504,
-                                "pre-delete flush did not drain within 600s; "
-                                "nothing was deleted — retry",
-                            )
-                            self._send_json(body_, status)
-                            return
-                    mode = str(spec.get("mode", "copy-on-write"))
-                    # validate the client-supplied mode HERE (explicit
-                    # whitelist) instead of substring-matching exception
-                    # text after the fact — an unrelated ValueError whose
-                    # message happens to contain "mode" must stay a 500
-                    if mode not in ("copy-on-write", "merge-on-read"):
-                        status, body_ = _err(
-                            400,
-                            f"unknown delete mode {mode!r}: expected "
-                            "'copy-on-write' or 'merge-on-read'",
-                        )
-                        self._send_json(body_, status)
-                        return
-                    report = ing.table.delete_where(
-                        pred,
-                        ts_min=int(spec["ts_min"]) if "ts_min" in spec else None,
-                        ts_max=int(spec["ts_max"]) if "ts_max" in spec else None,
-                        topic=str(spec["topic"]) if "topic" in spec else None,
-                        partition=int(spec["partition"]) if "partition" in spec else None,
-                        mode=mode,
-                    )
-                    self._send_json({"table": table, "mode": mode, **report})
-                finally:
-                    ing.maintenance_lock.release()
+                self._delete(table, ing)
             elif action == "rollup":
-                # refresh the incremental materialized rollup — a
-                # maintenance action like flush/compact (shares the
-                # per-table lock; concurrent refreshes would race the
-                # pointer swing into a lost-delta retry)
+                # refresh the incremental materialized rollup — concurrent
+                # refreshes would race the pointer swing into a lost-delta
+                # retry
                 from zombi_spark.table.rollup import MaterializedRollup
 
-                if not ing.maintenance_lock.acquire(blocking=False):
-                    status, body = _err(409, f"maintenance already in progress for {table}")
-                    self._send_json(body, status)
-                    return
-                try:
+                with _maintenance(ing, table):
                     roll = MaterializedRollup(
                         ing.table, os.path.join(ing.table.path, "_rollup")
                     )
                     report = roll.refresh()
-                    self._send_json({"table": table, **report})
-                finally:
-                    ing.maintenance_lock.release()
+                self.send_json({"table": table, **report})
             else:
-                status, body = _err(404, f"no such action {action}")
-                self._send_json(body, status)
+                raise HttpError(404, f"no such action {action}")
         except AdmissionRejected as exc:  # T10: the real 503
-            status, body = _err(503, str(exc))
-            self._send_json(body, status)
+            raise HttpError(503, str(exc)) from None
         except ProtoDecodeError as exc:  # S2: malformed protobuf → 400
-            status, body = _err(400, f"protobuf decode: {exc}")
-            self._send_json(body, status)
+            raise HttpError(400, f"protobuf decode: {exc}") from None
         except (ValueError, KeyError, TypeError) as exc:
-            status, body = _err(400, str(exc))
-            self._send_json(body, status)
-        except Exception as exc:  # noqa: BLE001 — envelope of last resort
-            # e.g. StreamingQueryException out of a failed flush drain
-            # (a concurrent append can fail the batch via the sequence
-            # collision guard): answer 500 so the client can retry,
-            # never a closed socket with no response
-            import contextlib as _ctx
+            raise HttpError(400, str(exc)) from None
 
-            with _ctx.suppress(OSError):
-                status, body = _err(500, f"{type(exc).__name__}: {exc}")
-                self._send_json(body, status)
+    def _delete(self, table: str, ing: StreamingIngest) -> None:
+        """Row-level takedown over HTTP: structured selectors only (a raw
+        predicate string over the wire would make the public edge a SQL
+        endpoint); selectors AND together."""
+        from pyspark.sql import functions as F
+
+        try:
+            spec = json.loads(self.body) if self.body else {}
+        except json.JSONDecodeError as exc:
+            raise HttpError(400, f"invalid JSON body: {exc}") from None
+        if not isinstance(spec, dict):
+            raise HttpError(400, "body must be a JSON object")
+        allowed = {
+            "idempotency_keys", "topic", "partition", "ts_min",
+            "ts_max", "flush", "mode",
+        }
+        unknown = set(spec) - allowed
+        if unknown:
+            raise HttpError(400, f"unknown selector(s): {sorted(unknown)}")
+        conds = []
+        keys = spec.get("idempotency_keys")
+        # a JSON string here would iterate character-by-character into
+        # isin() — silently deleting nothing (or the wrong single-char
+        # keys) on a takedown endpoint
+        if "idempotency_keys" in spec and not (
+            isinstance(keys, list)
+            and all(isinstance(k, (str, int)) and not isinstance(k, bool) for k in keys)
+        ):
+            raise HttpError(400, "idempotency_keys must be a JSON array of strings or integers")
+        # an empty list has always meant "no key filter" (same as
+        # omitting the selector) — keep that contract (ADVICE r7)
+        if keys:
+            conds.append(F.col("idempotency_key").isin([str(k) for k in keys]))
+        if "topic" in spec:
+            conds.append(F.col("topic") == str(spec["topic"]))
+        if "partition" in spec:
+            conds.append(F.col("partition") == int(spec["partition"]))
+        if "ts_min" in spec:
+            conds.append(F.col("timestamp_ms") >= int(spec["ts_min"]))
+        if "ts_max" in spec:
+            conds.append(F.col("timestamp_ms") <= int(spec["ts_max"]))
+        if not conds:
+            raise HttpError(
+                400,
+                "at least one selector required (idempotency_keys, "
+                "topic, partition, ts_min, ts_max) — an unbounded "
+                "delete must be expressed deliberately via retention",
+            )
+        pred = conds[0]
+        for c in conds[1:]:
+            pred = pred & c
+        with _maintenance(ing, table):
+            if spec.get("flush", True):
+                # takedown must also catch rows still in the hot tier:
+                # drain the landing zone first so the doomed rows are IN
+                # the table the delete rewrites
+                _drain(
+                    ing, "pre-delete flush did not drain within 600s; nothing was deleted — retry"
+                )
+            mode = str(spec.get("mode", "copy-on-write"))
+            # the client-supplied mode is checked against an explicit
+            # whitelist, never inferred from exception text
+            if mode not in ("copy-on-write", "merge-on-read"):
+                raise HttpError(
+                    400,
+                    f"unknown delete mode {mode!r}: expected 'copy-on-write' or 'merge-on-read'",
+                )
+            report = ing.table.delete_where(
+                pred,
+                ts_min=int(spec["ts_min"]) if "ts_min" in spec else None,
+                ts_max=int(spec["ts_max"]) if "ts_max" in spec else None,
+                topic=str(spec["topic"]) if "topic" in spec else None,
+                partition=int(spec["partition"]) if "partition" in spec else None,
+                mode=mode,
+            )
+        self.send_json({"table": table, "mode": mode, **report})
 
     # ------------------------------------------------------------ read path
-    def do_GET(self) -> None:  # noqa: N802
-        # same envelope-of-last-resort as do_POST: a Spark/IO exception
-        # on a read route must answer 500, never slam the socket. The
-        # _responded flag (set by _send_bytes, reset here — handler
-        # instances persist across keep-alive requests) keeps a failure
-        # AFTER headers went out from appending a second response.
-        self._responded = False
-        try:
-            self._do_get()
-        except Exception as exc:  # noqa: BLE001
-            if not self._responded:
-                import contextlib as _ctx
-
-                with _ctx.suppress(OSError):
-                    status, body = _err(500, f"{type(exc).__name__}: {exc}")
-                    self._send_json(body, status)
-            else:
-                # headers already went out and the body may be short of
-                # its promised Content-Length — the keep-alive stream is
-                # desynced; close it so the client sees clean EOF rather
-                # than the NEXT response spliced into this one's body
-                self.close_connection = True
-
-    def _do_get(self) -> None:
-        self._drain_body()  # a GET body is legal; leaving it desyncs keep-alive
-        if self._reject_bad_body():
-            return
+    def _get(self) -> None:
         parts, q = self._route()
         if parts and parts[0] == "health" and len(parts) <= 2:
             # server-level health (handlers.rs:1035-1041): live = process
@@ -742,7 +519,7 @@ class _Handler(BaseHTTPRequestHandler):
             if probe == "live":
                 # liveness must be O(1) — no manifest replay, no landing
                 # scans, or a slow filesystem gets a live process killed
-                self._send_json({"live": True})
+                self.send_json({"live": True})
                 return
             from zombi_spark.table.stats import health
 
@@ -750,12 +527,12 @@ class _Handler(BaseHTTPRequestHandler):
                        self.server.known_ingests()}  # type: ignore[attr-defined]
             ready = all(r["ready"] for r in reports.values())
             if probe == "ready":
-                self._send_json({"ready": ready}, 200 if ready else 503)
+                self.send_json({"ready": ready}, 200 if ready else 503)
             elif probe is None:
-                self._send_json({"live": True, "ready": ready, "tables": reports})
+                self.send_json({"live": True, "ready": ready, "tables": reports})
             else:
                 # a typo'd probe name must not read as 200-healthy
-                self._send_err(404, f"no such health probe {probe!r}")
+                raise HttpError(404, f"no such health probe {probe!r}")
             return
         if len(parts) == 3 and parts[0] == "consumers" and parts[2] == "offset":
             # handlers.rs:1171-1188 — ?topic=&partition=; offset null for
@@ -764,20 +541,12 @@ class _Handler(BaseHTTPRequestHandler):
 
             group = parts[1]
             try:
-                topic = validate_table_name(q["topic"])
-                partition = int(q["partition"])
+                topic, partition = q["topic"], int(q["partition"])
             except (ValueError, KeyError) as exc:
-                status, body = _err(400, f"topic and partition query params required: {exc}")
-                self._send_json(body, status)
-                return
-            try:
-                ing = self._ingest(topic, create=False)
-            except KeyError:
-                status, body = _err(404, f"table {topic} not found")
-                self._send_json(body, status)
-                return
+                raise HttpError(400, f"topic and partition query params required: {exc}") from None
+            ing = self._ingest(topic)
             offset = ConsumerOffsets(ing.table.path).get(group, partition)
-            self._send_json(
+            self.send_json(
                 {"group": group, "topic": topic, "partition": partition, "offset": offset}
             )
             return
@@ -790,7 +559,7 @@ class _Handler(BaseHTTPRequestHandler):
             # which process landed the writes.
             from zombi_spark.table.stats import table_stats
 
-            self._send_json(
+            self.send_json(
                 {
                     **self.server.counters.snapshot(),  # type: ignore[attr-defined]
                     "tables": {
@@ -826,28 +595,16 @@ class _Handler(BaseHTTPRequestHandler):
                 + prometheus_ingest_text(ingests)
                 + self.server.counters.prometheus_histograms()  # type: ignore[attr-defined]
             )
-            self._send_bytes(text.encode(), "text/plain; version=0.0.4")
+            self.send_bytes(text.encode(), "text/plain; version=0.0.4")
             return
         if len(parts) < 2 or parts[0] != "tables":
-            status, body = _err(404, "no such route")
-            self._send_json(body, status)
-            return
-        try:
-            table = validate_table_name(parts[1])
-        except ValueError as exc:
-            status, body = _err(400, str(exc))
-            self._send_json(body, status)
-            return
-        try:
-            ing = self._ingest(table, create=False)
-        except KeyError:
-            status, body = _err(404, f"table {table} not found")
-            self._send_json(body, status)
-            return
+            raise HttpError(404, "no such route")
+        table = parts[1]
+        ing = self._ingest(table)
         if len(parts) == 3 and parts[2] == "health":
             from zombi_spark.table.stats import health
 
-            self._send_json(health(ing.table, ingest=ing))
+            self.send_json(health(ing.table, ingest=ing))
             return
         if len(parts) == 3 and parts[2] == "metadata":
             # M5 introspection (handlers.rs:1236-1331): schema + snapshot
@@ -864,7 +621,7 @@ class _Handler(BaseHTTPRequestHandler):
                 }
                 for s in t.snapshots()
             ]
-            self._send_json({"table_metadata": t.table_metadata(), "snapshots": snaps})
+            self.send_json({"table_metadata": t.table_metadata(), "snapshots": snaps})
             return
         if len(parts) == 3 and parts[2] == "rollup":
             # the materialized per-hour rollup — O(keys) state read, the
@@ -877,9 +634,7 @@ class _Handler(BaseHTTPRequestHandler):
                 if not 0 <= limit <= 100_000:
                     raise ValueError(f"limit must be in [0, 100000], got {limit}")
             except ValueError as exc:
-                status, body = _err(400, str(exc))
-                self._send_json(body, status)
-                return
+                raise HttpError(400, str(exc)) from None
             # a concurrent refresh may GC the state dir this read's
             # pointer snapshot references (one-generation grace covers
             # almost all of the window); retry once against the fresh
@@ -898,7 +653,7 @@ class _Handler(BaseHTTPRequestHandler):
                 if d.get("event_date") is not None:
                     d["event_date"] = str(d["event_date"])
                 records.append(d)
-            self._send_json({"table": table, "position": position, "rows": records})
+            self.send_json({"table": table, "position": position, "rows": records})
             return
         if len(parts) == 3 and parts[2] == "watermark":
             # M5 watermark endpoint: committed (snapshot-summary) marks
@@ -906,7 +661,7 @@ class _Handler(BaseHTTPRequestHandler):
                 f"{topic}/{part}": seq
                 for (topic, part), seq in ing.table.watermark_map().items()
             }
-            self._send_json({"table": table, "committed_watermarks": wm})
+            self.send_json({"table": table, "committed_watermarks": wm})
             return
         if len(parts) == 3 and parts[2] == "followers":
             # retention-vs-consumer-lag observability (r15, the metric
@@ -933,7 +688,7 @@ class _Handler(BaseHTTPRequestHandler):
                     # snapshot (or anything newer it needs) is retained
                     "covered": oldest is None or pos + 1 >= oldest or pos >= (latest or 0),
                 }
-            self._send_json(
+            self.send_json(
                 {
                     "table": table,
                     "latest_version": latest,
@@ -943,9 +698,7 @@ class _Handler(BaseHTTPRequestHandler):
             )
             return
         if len(parts) != 2:
-            status, body = _err(404, "no such route")
-            self._send_json(body, status)
-            return
+            raise HttpError(404, "no such route")
         try:
             fields = tuple(q["fields"].split(",")) if "fields" in q else _DEFAULT_FIELDS
             unknown = [f for f in fields if f not in _KNOWN_FIELDS]
@@ -960,9 +713,7 @@ class _Handler(BaseHTTPRequestHandler):
             since_ms = int(q["since_ms"]) if "since_ms" in q else None
             partition = int(q["partition"]) if "partition" in q else None
         except ValueError as exc:
-            status, body = _err(400, str(exc))
-            self._send_json(body, status)
-            return
+            raise HttpError(400, str(exc)) from None
         # limit+1 probe for has_more (handlers.rs:992-1001)
         _t0 = time.perf_counter()
         tail_df = ing.tail(table, partition=partition, since_ms=since_ms, limit=limit + 1)
@@ -982,10 +733,10 @@ class _Handler(BaseHTTPRequestHandler):
             sink = io.BytesIO()
             with pa.ipc.new_stream(sink, tbl.schema) as writer:
                 writer.write_table(tbl)
-            self._send_bytes(
+            self.send_bytes(
                 sink.getvalue(),
                 _ARROW_MEDIA,
-                extra_headers={"X-Has-More": "true" if has_more else "false"},
+                headers={"X-Has-More": "true" if has_more else "false"},
             )
             return
         rows = tail_df.collect()
@@ -999,7 +750,7 @@ class _Handler(BaseHTTPRequestHandler):
             if isinstance(d.get("payload"), (bytes, bytearray)):
                 d["payload"] = bytes(d["payload"]).decode("utf-8", errors="replace")
             records.append({k: d.get(k) for k in fields})
-        self._send_json({"records": records, "has_more": has_more})
+        self.send_json({"records": records, "has_more": has_more})
 
 
 class _Counters:
@@ -1101,10 +852,8 @@ class _WorkerState:
     """Per-worker-process registry: table → LandingZone (resolved once
     from the parent's control plane) and table → WriteCombiner."""
 
-    def __init__(self, parent_addr: tuple, combine: bool, combine_args: tuple):
+    def __init__(self, parent_addr: tuple):
         self.parent_addr = parent_addr
-        self.combine = combine
-        self.combine_args = combine_args
         self.zones: dict[str, LandingZone] = {}
         self.combiners: dict[str, WriteCombiner] = {}
         self.lock = threading.Lock()
@@ -1127,26 +876,27 @@ class _WorkerState:
             )
             resp = conn.getresponse()
             payload = resp.read()
+        except (OSError, http.client.HTTPException) as exc:
+            # parent down or died mid-reply: a retryable 502, not a
+            # slammed connection (the worker itself is fine)
+            raise HttpError(502, f"query plane unavailable: {exc}") from exc
         finally:
             conn.close()
         if resp.status == 404:
             raise KeyError(table)
         if resp.status != 200:
-            raise ValueError(
-                json.loads(payload).get("error", {}).get("message", "resolve failed")
-            )
+            message = json.loads(payload).get("error", {}).get("message", "resolve failed")
+            raise HttpError(502, f"query plane unavailable: {message}")
         cfg = json.loads(payload)
         zone = LandingZone(cfg["landing_dir"], cfg["checkpoint_dir"], cfg["byte_budget"])
         with self.lock:
             return self.zones.setdefault(table, zone)
 
-    def combiner_for(self, table: str) -> WriteCombiner | None:
-        if not self.combine:
-            return None
+    def combiner_for(self, table: str) -> WriteCombiner:
         zone = self.zone_for(table, create=True)
         with self.lock:
             if table not in self.combiners:
-                self.combiners[table] = WriteCombiner(zone, *self.combine_args)
+                self.combiners[table] = WriteCombiner(zone)
             return self.combiners[table]
 
     def close(self) -> None:
@@ -1164,120 +914,69 @@ class _WriteWorkerHandler(_Handler):
     (reads, flush/compact, health, metrics) to the parent's internal
     listener, where the one Spark session lives."""
 
-    def _ingest(self, table: str, create: bool = True):
-        # the write path only calls .produce() on what this returns —
-        # a bare LandingZone satisfies that contract
-        return self.server.state.zone_for(table, create)  # type: ignore[attr-defined]
+    def _post(self) -> None:
+        parts, _q = self._route()
+        if len(parts) in (2, 3) and parts[0] == "tables" and parts[2:] in ([], ["bulk"]):
+            super()._post()  # the write plane, served locally
+        else:
+            self._proxy(parts)
 
-    def _combiner(self, table: str) -> WriteCombiner | None:
-        return self.server.state.combiner_for(table)  # type: ignore[attr-defined]
+    def _get(self) -> None:
+        parts, _q = self._route()
+        if parts == ["health", "live"]:
+            # liveness of THIS worker, answered locally in O(1) — a
+            # proxied probe would tie worker liveness to parent
+            # availability and an orchestrator would kill a healthy
+            # write plane over a busy query plane
+            self.send_json({"live": True})
+        else:
+            self._proxy(parts)
 
-    def _proxy(self) -> None:
+    def _proxy(self, parts: list[str]) -> None:
         """Forward this request verbatim to the parent and relay the
         response. Hop-by-hop headers stay per-connection."""
+        if parts and parts[0] == "internal":
+            # the /internal control plane answers only on the parent's
+            # internal listener — proxying it would expose it on the
+            # PUBLIC port via any worker. Match the parent's public 404.
+            raise HttpError(404, "no such route")
         hop = ("host", "connection", "keep-alive", "transfer-encoding")
         headers = {k: v for k, v in self.headers.items() if k.lower() not in hop}
         parent = self.server.state.parent_addr  # type: ignore[attr-defined]
         # generous timeout: flush blocks up to 600 s before its own 504
         conn = http.client.HTTPConnection(*parent, timeout=650)
         try:
-            try:
-                conn.request(self.command, self.path, self._body() or None, headers)
-                resp = conn.getresponse()
-                payload = resp.read()
-            except (OSError, http.client.HTTPException) as exc:
-                # parent down/mid-restart (refused, or died mid-response
-                # → IncompleteRead): answer 502 (a retryable HTTP error)
-                # instead of slamming the connection shut
-                status, body = _err(502, f"query plane unavailable: {exc}")
-                self._send_json(body, status)
-                return
-            self.send_response(resp.status)
-            for k, v in resp.getheaders():
-                if k.lower() in hop + ("content-length", "date", "server"):
-                    continue
-                self.send_header(k, v)
-            self.send_header("X-Edge-Proxied-By", str(os.getpid()))
-            self.send_header("Content-Length", str(len(payload)))
-            self.end_headers()
-            self.wfile.write(payload)
+            conn.request(self.command, self.path, self.body or None, headers)
+            resp = conn.getresponse()
+            payload = resp.read()
+        except (OSError, http.client.HTTPException) as exc:
+            # parent down/mid-restart (refused, or died mid-response →
+            # IncompleteRead): a retryable 502, not a slammed connection
+            raise HttpError(502, f"query plane unavailable: {exc}") from exc
         finally:
             conn.close()
-
-    def _reject_internal(self, parts: list[str]) -> bool:
-        """The /internal control plane must answer only on the parent's
-        internal listener — proxying it would expose it on the PUBLIC
-        port via any worker. Match the parent's public behavior: 404."""
-        if parts and parts[0] == "internal":
-            self._drain_body()
-            status, body = _err(404, "no such route")
-            self._send_json(body, status)
-            return True
-        return False
-
-    def do_POST(self) -> None:  # noqa: N802
-        parts, _q = self._route()
-        if self._reject_internal(parts):
-            return
-        action = parts[2] if len(parts) == 3 else None
-        if len(parts) in (2, 3) and parts[0] == "tables" and action in (None, "bulk"):
-            self._responded = False
-            try:
-                # the RAW body (not the parent's envelope wrapper): the
-                # resolve-via-parent failures below must keep their 502
-                # retryable semantic instead of the envelope's 500
-                super()._do_post()  # the write plane, served locally
-            except (OSError, http.client.HTTPException, ValueError) as exc:
-                # first write for an uncached table resolves via the
-                # parent; parent down (OSError/HTTPException) or parent
-                # answering resolve with an error (ValueError from
-                # zone_for) is a retryable 502, not a slammed connection
-                # (the worker itself is fine)
-                import contextlib as _ctx
-
-                with _ctx.suppress(OSError):
-                    status, body = _err(502, f"query plane unavailable: {exc}")
-                    self._send_json(body, status)
-            except Exception as exc:  # noqa: BLE001 — envelope of last resort
-                if not self._responded:
-                    import contextlib as _ctx
-
-                    with _ctx.suppress(OSError):
-                        status, body = _err(500, f"{type(exc).__name__}: {exc}")
-                        self._send_json(body, status)
-                else:
-                    self.close_connection = True
-        else:
-            self._drain_body()
-            if self._reject_bad_body():
-                return
-            self._proxy()
-
-    def do_GET(self) -> None:  # noqa: N802
-        parts, _q = self._route()
-        if self._reject_internal(parts):
-            return
-        self._drain_body()
-        if self._reject_bad_body():
-            return
-        if parts == ["health", "live"]:
-            # liveness of THIS worker, answered locally in O(1) — a
-            # proxied probe would tie worker liveness to parent
-            # availability and an orchestrator would kill a healthy
-            # write plane over a busy query plane
-            self._send_json({"live": True})
-            return
-        self._proxy()
+        self.send_response(resp.status)
+        for k, v in resp.getheaders():
+            if k.lower() not in hop + ("content-length", "date", "server"):
+                self.send_header(k, v)
+        self.send_header("X-Edge-Proxied-By", str(os.getpid()))
+        self.send_header("Content-Length", str(len(payload)))
+        self.end_headers()
+        self.wfile.write(payload)
 
 
-def _edge_worker_main(host, port, parent_addr, combine, combine_args, ready, latency_backing=None) -> None:
+def _edge_worker_main(host, port, parent_addr, ready, latency_backing=None) -> None:
     """Entry point of one edge worker process (spawned — never forked:
     the parent holds a live JVM). Binds the shared public port with
     SO_REUSEPORT and serves until SIGTERM, draining combiners first so
     every acked write is durable before exit."""
-    state = _WorkerState(tuple(parent_addr), combine, tuple(combine_args))
+    state = _WorkerState(tuple(parent_addr))
     srv = _ReusePortServer((host, port), _WriteWorkerHandler)
     srv.state = state  # type: ignore[attr-defined]
+    # the write path only calls .produce() on what the resolver returns —
+    # a bare LandingZone satisfies that contract
+    srv.resolver = state.zone_for  # type: ignore[attr-defined]
+    srv.combiner_for = state.combiner_for  # type: ignore[attr-defined]
     srv.counters = _Counters(latency_backing)  # type: ignore[attr-defined]
 
     def _graceful_stop() -> None:
@@ -1310,10 +1009,10 @@ class HttpIngestEdge:
     unknown table when ``create`` is False (reads/maintenance → 404, so
     read-only traffic can never fabricate per-table state).
 
-    ``combine=True`` (default) routes single-event POSTs through a
-    per-table :class:`WriteCombiner` — one landing file per few
-    milliseconds instead of per request, acked after the batch lands
-    (S4, combiner.rs:98-225). Bulk requests always land directly.
+    Single-event POSTs go through a per-table :class:`WriteCombiner` —
+    one landing file per few milliseconds instead of per request, acked
+    after the batch lands (S4, combiner.rs:98-225). Bulk requests land
+    directly.
 
     ``workers=N`` scales the WRITE plane across N extra OS processes:
     each binds the same public port with SO_REUSEPORT and lands single /
@@ -1329,15 +1028,10 @@ class HttpIngestEdge:
         resolver,
         host: str = "127.0.0.1",
         port: int = 0,
-        combine: bool = True,
-        combine_max_events: int = 512,
-        combine_max_wait_ms: float = 4.0,
         workers: int = 0,
     ):
         self.resolver = resolver
-        self.combine = combine
         self.workers = workers
-        self._combine_args = (combine_max_events, combine_max_wait_ms)
         self._combiners: dict[str, WriteCombiner] = {}
         self._combiner_lock = threading.Lock()
         self._known: dict[str, StreamingIngest] = {}
@@ -1373,9 +1067,7 @@ class HttpIngestEdge:
     def known_ingests(self) -> list[StreamingIngest]:
         return list(self._known.values())
 
-    def combiner_for(self, table: str) -> WriteCombiner | None:
-        if not self.combine:
-            return None
+    def combiner_for(self, table: str) -> WriteCombiner:
         with self._combiner_lock:
             existing = self._combiners.get(table)
         if existing is not None:
@@ -1386,7 +1078,7 @@ class HttpIngestEdge:
         # it; the double-checked setdefault keeps one combiner per table
         # (a losing racer's combiner is closed, not leaked)
         ing = self.resolver(table, True)
-        fresh = WriteCombiner(ing, *self._combine_args)
+        fresh = WriteCombiner(ing)
         with self._combiner_lock:
             won = self._combiners.setdefault(table, fresh)
         if won is not fresh:
@@ -1436,8 +1128,6 @@ class HttpIngestEdge:
                         pub_host,
                         pub_port,
                         internal_addr,
-                        self.combine,
-                        self._combine_args,
                         ready,
                         self._latency_shm,
                     ),

@@ -1327,8 +1327,9 @@ class EventTable:
         dir hashes to ONE shuffle partition; measured 720 single-dir
         tasks ≈ 9s vs defaultParallelism tasks ≈ 2s), no bloom filter
         when footer stats prove every key null (720 filters for zero
-        keys were ~1s of compact time; otherwise the output keeps the
-        bloom the dedup probe relies on) and the largest dir's rows."""
+        keys were ~1s of compact time; otherwise the output keeps the key
+        bloom that key-equality / ``IN`` deletes read) and the largest
+        dir's rows."""
         rows_by_dir: dict[str, int] = {}
         for f in inputs:
             d = os.path.dirname(f["file_path"])
@@ -1380,9 +1381,12 @@ class EventTable:
         Arrow writer's per-file cost is ~10× lower (measured: 720-dir
         batch 3.0s JVM → 1.2s Arrow). Scope: UNKEYED output only
         (``key_ndv == 0`` ⇒ no bloom filter — pyarrow 16 cannot write
-        parquet blooms) in the thin regime, over flat primitive schemas;
-        everything else keeps the JVM vectorized writer, where big-file
-        setup amortizes to zero.
+        parquet blooms) in the thin regime; everything else keeps the JVM
+        vectorized writer, where big-file setup amortizes to zero. Every
+        table schema is flat primitives (the system columns plus the
+        extraction type map: long/string/int/binary/date/double/boolean),
+        which parquet-mr and pyarrow encode alike, so the route needs no
+        schema gate.
 
         The move happens BEFORE the snapshot commit; a crash mid-move
         leaves some files in the data tree but referenced by no snapshot —
@@ -1398,7 +1402,7 @@ class EventTable:
         ).sortWithinPartitions("event_date", "event_hour", *order)
         thin = rows_per_dir is not None and rows_per_dir < 100_000
         stats = None
-        if key_ndv == 0 and thin and self._arrow_writable_schema():
+        if key_ndv == 0 and thin:
             stats = self._stage_arrow(shaped, staging, cap)
         else:
             writer = self._bloom_options(
@@ -1416,23 +1420,6 @@ class EventTable:
         moved = self._move_staged_in(staging, prefix=prefix, stats=stats)
         self._rmtree(staging)
         return moved
-
-    _ARROW_SAFE_TYPES = (
-        "string", "binary", "tinyint", "smallint", "int", "bigint",
-        "float", "double", "boolean", "date",
-    )
-
-    def _arrow_writable_schema(self) -> bool:
-        """The Arrow staging path is only taken for schemas whose
-        parquet physical/logical types are byte-identical between
-        parquet-mr and pyarrow (flat primitives). Anything else — e.g.
-        timestamps (INT96/isAdjustedToUTC divergence), nested types —
-        stays on the JVM writer so a table never mixes subtly different
-        encodings across appends."""
-        return all(
-            f.dataType.simpleString() in self._ARROW_SAFE_TYPES
-            for f in self.table_schema().fields
-        )
 
     def _stage_arrow(
         self, shaped: DataFrame, staging: str, cap: int | None
@@ -1556,9 +1543,14 @@ class EventTable:
 
     @staticmethod
     def _bloom_options(writer, expected_ndv: int | None = None):
-        """X5 analogue: parquet bloom filter on idempotency_key makes the
-        dedup-history anti-join probe skip row groups (the reference keeps
-        an in-memory bloom per partition, rocksdb.rs:39-88).
+        """X5 analogue (the reference keeps an in-memory bloom per
+        partition, rocksdb.rs:39-88): a parquet bloom filter on
+        idempotency_key. Its reader is a key-equality or ``IN`` predicate
+        — ``delete_where`` and HTTP ``/delete`` with ``idempotency_keys``
+        — which skips row groups that cannot hold a key. The
+        dedup-history anti-join never reads it: that scan's pushed
+        filters are not-null checks and at most a topic equality, never a
+        key value, so parquet has nothing to test against the bloom.
 
         ``expected.ndv`` matters for WRITE speed, not just sizing: without
         it the parquet writer maintains a ladder of candidate bloom

@@ -11,9 +11,11 @@ and plan over its tables.  The registration side is a separate HTTP
 
 Spark-first mapping: the catalog itself is the library
 :class:`~zombi_spark.table.catalog.Catalog` (a warehouse-rooted JSON
-registry); this module adds the wire protocol on top with stdlib
-``http.server`` — no web framework ships in this container.  The server
-is read-only exactly like the reference, with ONE documented extension:
+registry); this module adds the wire protocol on top: its routes and
+the Iceberg ErrorModel body, over the request layer it shares with the
+ingest edge (:mod:`zombi_spark.http_handler` — keep-alive, body
+framing, one error dispatch).  The server is read-only exactly like the
+reference, with ONE documented extension:
 ``POST /catalog/v1/namespaces/{ns}/tables`` accepts a registration so
 that :class:`RestCatalogClient` (the storage/catalog.rs analogue) can be
 exercised end-to-end against our own server instead of an external
@@ -36,8 +38,9 @@ import threading
 import urllib.error
 import urllib.parse
 import urllib.request
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import ThreadingHTTPServer
 
+from zombi_spark.http_handler import HttpError, JsonHandler
 from zombi_spark.table.catalog import Catalog, TableNotFoundError
 
 _PREFIX = "/catalog/v1"
@@ -66,15 +69,7 @@ def _metadata_location(table_path: str) -> str:
     return f"{table_path}/_zombi_meta/table.json"
 
 
-def _error_body(status: int, message: str) -> bytes:
-    # the Iceberg REST ErrorModel envelope (api/catalog.rs:320-333 returns
-    # the same shape for its 404s)
-    return json.dumps(
-        {"error": {"message": message, "type": "NoSuchTableException" if status == 404 else "BadRequestException", "code": status}}
-    ).encode()
-
-
-class _Handler(BaseHTTPRequestHandler):
+class _Handler(JsonHandler):
     """Routes (api/catalog.rs:193-431):
 
     GET  {p}/config                                  → warehouse config
@@ -87,86 +82,59 @@ class _Handler(BaseHTTPRequestHandler):
     """
 
     server_version = "zombi-spark-catalog/1.0"
-    protocol_version = "HTTP/1.1"
 
-    def log_message(self, *args) -> None:  # quiet under pytest
-        pass
+    def error_body(self, status: int, message: str) -> dict:
+        # the Iceberg REST ErrorModel envelope (api/catalog.rs:320-333
+        # returns the same shape for its 404s)
+        kind = "NoSuchTableException" if status == 404 else "BadRequestException"
+        return {"error": {"message": message, "type": kind, "code": status}}
+
+    def do_GET(self) -> None:  # noqa: N802 (http.server API)
+        self.dispatch(self._get)
+
+    def do_HEAD(self) -> None:  # noqa: N802
+        self.dispatch(self._head)
+
+    def do_POST(self) -> None:  # noqa: N802
+        self.dispatch(self._post)
 
     @property
     def catalog(self) -> Catalog:
         return self.server.catalog  # type: ignore[attr-defined]
 
-    def _send(self, status: int, payload: bytes, head_only: bool = False) -> None:
-        self.send_response(status)
-        self.send_header("Content-Type", "application/json")
-        self.send_header("Content-Length", str(len(payload)))
-        self.end_headers()
-        if not head_only:
-            self.wfile.write(payload)
-
-    def _send_json(self, obj, status: int = 200) -> None:
-        self._send(status, json.dumps(obj).encode())
-
-    def _route(self) -> tuple[str, list[str]]:
+    def _route(self) -> list[str]:
         path = urllib.parse.urlparse(self.path).path.rstrip("/")
         if not path.startswith(_PREFIX):
-            return "", []
-        return path, [urllib.parse.unquote(p) for p in path[len(_PREFIX):].split("/") if p]
+            return []
+        return [urllib.parse.unquote(p) for p in path[len(_PREFIX):].split("/") if p]
 
-    def _namespace_ok(self, ns: str) -> bool:
-        return ns in self.catalog.namespaces()
-
-    def _dispatch(self, handler) -> None:
-        """Every handler answers with the ErrorModel envelope, even on an
-        unexpected exception (corrupt registry JSON, unreadable table
-        metadata) — a bare traceback would close the socket with no
-        response and the client would see a connection error instead of
-        the documented 5xx body."""
-        try:
-            handler()
-        except Exception as exc:  # noqa: BLE001 — the envelope of last resort
-            try:
-                self._send(500, _error_body(500, f"{type(exc).__name__}: {exc}"))
-            except OSError:
-                pass  # client already gone
-
-    def do_GET(self) -> None:  # noqa: N802 (http.server API)
-        self._dispatch(self._get)
-
-    def do_HEAD(self) -> None:  # noqa: N802
-        self._dispatch(self._head)
-
-    def do_POST(self) -> None:  # noqa: N802
-        self._dispatch(self._post)
+    def _namespace(self, ns: str) -> None:
+        if ns not in self.catalog.namespaces():
+            raise HttpError(404, f"namespace {ns} not found")
 
     def _get(self) -> None:
-        _, parts = self._route()
+        parts = self._route()
         if parts == ["config"]:
             # api/catalog.rs:193-214 — hand the engine its warehouse root
-            self._send_json({"defaults": {}, "overrides": {"warehouse": self.catalog.root}})
+            self.send_json({"defaults": {}, "overrides": {"warehouse": self.catalog.root}})
         elif parts == ["namespaces"]:
-            self._send_json({"namespaces": [[n] for n in self.catalog.namespaces()]})
+            self.send_json({"namespaces": [[n] for n in self.catalog.namespaces()]})
         elif len(parts) == 2 and parts[0] == "namespaces":
-            if self._namespace_ok(parts[1]):
-                self._send_json({"namespace": [parts[1]], "properties": {}})
-            else:
-                self._send(404, _error_body(404, f"namespace {parts[1]} not found"))
+            self._namespace(parts[1])
+            self.send_json({"namespace": [parts[1]], "properties": {}})
         elif len(parts) == 3 and parts[0] == "namespaces" and parts[2] == "tables":
-            if not self._namespace_ok(parts[1]):
-                self._send(404, _error_body(404, f"namespace {parts[1]} not found"))
-                return
-            self._send_json(
+            self._namespace(parts[1])
+            self.send_json(
                 {"identifiers": [{"namespace": [parts[1]], "name": n} for n in self.catalog.list_tables()]}
             )
         elif len(parts) == 4 and parts[0] == "namespaces" and parts[2] == "tables":
             try:
                 info = self.catalog.head(parts[3])
             except TableNotFoundError:
-                self._send(404, _error_body(404, f"table {parts[3]} not found"))
-                return
+                raise HttpError(404, f"table {parts[3]} not found") from None
             # LoadTableResult shape (api/catalog.rs:293-333): metadata
             # location + the metadata we track (schema / spec / snapshot)
-            self._send_json(
+            self.send_json(
                 {
                     "metadata-location": _metadata_location(info["path"]),
                     "metadata": info,
@@ -174,42 +142,36 @@ class _Handler(BaseHTTPRequestHandler):
                 }
             )
         else:
-            self._send(404, _error_body(404, "no such route"))
+            raise HttpError(404, "no such route")
 
     def _head(self) -> None:
-        _, parts = self._route()
-        if len(parts) == 4 and parts[0] == "namespaces" and parts[2] == "tables":
-            # api/catalog.rs:414-431 — existence probe, empty body
-            exists = self._namespace_ok(parts[1]) and self.catalog.exists(parts[3])
-            self._send(200 if exists else 404, b"", head_only=True)
-        else:
-            self._send(404, b"", head_only=True)
+        # api/catalog.rs:414-431 — existence probe, empty body
+        parts = self._route()
+        exists = (
+            len(parts) == 4
+            and parts[0] == "namespaces"
+            and parts[2] == "tables"
+            and parts[1] in self.catalog.namespaces()
+            and self.catalog.exists(parts[3])
+        )
+        self.send_bytes(b"", "application/json", 200 if exists else 404)
 
     def _post(self) -> None:
-        _, parts = self._route()
-        if len(parts) == 3 and parts[0] == "namespaces" and parts[2] == "tables":
-            if not self._namespace_ok(parts[1]):
-                self._send(404, _error_body(404, f"namespace {parts[1]} not found"))
-                return
-            length = int(self.headers.get("Content-Length", 0))
-            try:
-                body = json.loads(self.rfile.read(length) or b"{}")
-                name = body["name"]
-            except (ValueError, KeyError, TypeError):
-                # TypeError: valid JSON that isn't an object ('[1,2]', 'null')
-                self._send(400, _error_body(400, "body must be JSON with a 'name' field"))
-                return
-            try:
-                entry = self.catalog.register(name, body.get("location"))
-            except ValueError as exc:  # table-name validation (P9)
-                self._send(400, _error_body(400, str(exc)))
-                return
-            self._send_json(
-                {"metadata-location": _metadata_location(entry["path"]), "metadata": entry},
-                status=200,
-            )
-        else:
-            self._send(405, _error_body(405, "read-only catalog: only table registration accepts POST"))
+        parts = self._route()
+        if not (len(parts) == 3 and parts[0] == "namespaces" and parts[2] == "tables"):
+            raise HttpError(405, "read-only catalog: only table registration accepts POST")
+        self._namespace(parts[1])
+        try:
+            body = json.loads(self.body or b"{}")
+            name = body["name"]
+        except (ValueError, KeyError, TypeError):
+            # TypeError: valid JSON that isn't an object ('[1,2]', 'null')
+            raise HttpError(400, "body must be JSON with a 'name' field") from None
+        try:
+            entry = self.catalog.register(name, body.get("location"))
+        except ValueError as exc:  # table-name validation (P9)
+            raise HttpError(400, str(exc)) from None
+        self.send_json({"metadata-location": _metadata_location(entry["path"]), "metadata": entry})
 
 
 class RestCatalogServer:
