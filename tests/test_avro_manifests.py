@@ -564,6 +564,42 @@ def test_tombstones_carry_real_stats_and_header_schema_id(spark, tmp_path):
     _schema, hdr, _recs = read_container(mfs[0]["manifest_path"])
     assert int(hdr["schema-id"].decode()) == meta["current-schema-id"]
 
+    # after a column-add, every manifest of a merge-on-read delete's list
+    # (the delete manifest too) names the schema it embeds
+    from zombi_spark.ingest.extraction import FieldSpec, TableSchemaConfig
+
+    k = FieldSpec(name="k", json_path="k", data_type="int64")
+    label = FieldSpec(name="label", json_path="label", data_type="utf8")
+    rows = [
+        ("t", 0, json.dumps({"k": i, "label": f"L{i}"}).encode(), 1704067200000 + i * 1000, None, i)
+        for i in range(8)
+    ]
+    ext = EventTable(
+        spark, str(tmp_path), "ext",
+        schema_config=TableSchemaConfig(payload_format="json", fields=[k]),
+    )
+    ext.append(prepare_events(spark.createDataFrame(rows[:4], RAW_EVENT_SCHEMA)))
+    ext = EventTable(
+        spark, str(tmp_path), "ext",
+        schema_config=TableSchemaConfig(payload_format="json", fields=[k, label]),
+    )
+    ext.append(
+        prepare_events(spark.createDataFrame(rows[4:], RAW_EVENT_SCHEMA), existing=ext.read())
+    )
+    assert ext.delete_where("sequence % 3 = 0", mode="merge-on-read")["rows_removed"] > 0
+    meta = _current_meta(ext)
+    assert meta["current-schema-id"] == 1
+    cur = next(
+        s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
+    )
+    header_ids = {}
+    for m in MF.read_manifest_list(cur["manifest-list"]):
+        _schema, hdr, _recs = read_container(m["manifest_path"])
+        embedded = json.loads(hdr["schema"].decode())
+        assert int(hdr["schema-id"].decode()) == embedded["schema-id"], m["content"]
+        header_ids[m["content"]] = int(hdr["schema-id"].decode())
+    assert header_ids[1] == meta["current-schema-id"]
+
 
 def test_extracted_column_bounds_reach_avro_manifests(spark, tmp_path):
     """r14: an extraction table's col_stats bounds ride into the Avro

@@ -1178,9 +1178,25 @@ def test_row_delete_merge_on_read_over_http(edge):
     t = ingests["mordel"].table
     assert t.read().count() == 4
     assert len(t.delete_files()) == 1
+    # an invalid mode is refused before the pre-delete drain: the landed
+    # event stays pending and no version is committed
+    status, _ = _call(
+        f"{base}/tables/mordel",
+        "POST",
+        json.dumps(
+            {"payload": '{"i":6}', "partition": 0, "timestamp_ms": 1704067206000}
+        ).encode(),
+    )
+    assert status == 202
+    zone = ingests["mordel"].zone
+    pending = zone.pending_files()
+    version = t.latest_version()
+    assert pending
     status, body = _call(
         f"{base}/tables/mordel/delete",
         "POST",
         json.dumps({"idempotency_keys": ["k0"], "mode": "nonsense"}).encode(),
     )
     assert status == 400 and "mode" in body["error"]["message"]
+    assert t.latest_version() == version
+    assert zone.pending_files() == pending

@@ -12,7 +12,11 @@ import os
 import pytest
 
 from zombi_spark.ingest.batch import RAW_EVENT_SCHEMA, prepare_events
-from zombi_spark.table.event_table import CommitConflictError, EventTable
+from zombi_spark.table.event_table import (
+    CommitConflictError,
+    EventTable,
+    _apply_position_deletes,
+)
 
 T0 = 1704067200000  # 2024-01-01T00:00:00Z
 
@@ -524,13 +528,13 @@ def test_tombstone_broadcast_gate_is_bytes_based(spark, table):
     dels = table.delete_files()
     expected = sorted(x.sequence for x in table.read().collect())
 
-    small = table._apply_position_deletes(
+    small = _apply_position_deletes(
         table._read_file_list([e["file_path"] for e in table.scan_files()]), dels
     )
     assert "BroadcastHashJoin" in small._jdf.queryExecution().executedPlan().toString()
 
     fat = [dict(d, file_size_bytes=65 * 1024 * 1024) for d in dels]
-    fallback = table._apply_position_deletes(
+    fallback = _apply_position_deletes(
         table._read_file_list([e["file_path"] for e in table.scan_files()]), fat
     )
     # over the cap the FORCED hint is gone (Spark may still pick

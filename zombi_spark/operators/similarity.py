@@ -745,10 +745,12 @@ def ivf_assign(
     )
 
 
-def _best_cell_expr(cents: list[tuple[int, list[int]]]):
-    """Argmax-cosine cell id as a pure Column over (qvec, vnorm) — the
-    scoring core shared by assignment and drift reassessment (highest
-    cosine wins, ties to the lowest centroid id)."""
+def _centroid_scores(cents: list[tuple[int, list[int]]]) -> list:
+    """Per-centroid ``struct(c, n)`` Columns over (qvec, vnorm): ``c`` the
+    floored cosine × 1e6, ``n`` the negated centroid id. Structs order
+    lexicographically, so the greatest is the highest cosine with ties to
+    the lowest centroid id — the Column scoring core of assignment, drift
+    reassessment and probe ranking."""
     scored = []
     for cid, qc_ints in cents:
         lit_qc = _lit_long_array(qc_ints)
@@ -756,9 +758,14 @@ def _best_cell_expr(cents: list[tuple[int, list[int]]]):
         cos = F.floor(
             F.try_divide(_dot(F.col("qvec"), lit_qc), F.col("vnorm") * norm_c) * 1e6
         ).cast("long")
-        # struct orders lexicographically: highest cosine first, then
-        # lowest centroid id (negated so greatest() prefers it)
         scored.append(F.struct(cos.alias("c"), F.lit(-cid).cast("long").alias("n")))
+    return scored
+
+
+def _best_cell_expr(cents: list[tuple[int, list[int]]]):
+    """Argmax-cosine cell id as a pure Column over (qvec, vnorm) (highest
+    cosine wins, ties to the lowest centroid id)."""
+    scored = _centroid_scores(cents)
     best = scored[0] if len(scored) == 1 else F.greatest(*scored)
     return (-best["n"]).cast("long")
 
@@ -821,17 +828,9 @@ def ivf_query_cells(
             f"query_id {idt}, q_q array<long>, q_n double, cell long",
             _probes,
         )
-    scored = []
-    for cid, qc_ints in cents:
-        lit_qc = _lit_long_array(qc_ints)
-        norm_c = F.sqrt(F.lit(sum(c * c for c in qc_ints)).cast("long"))
-        cos = F.floor(
-            F.try_divide(_dot(F.col("qvec"), lit_qc), F.col("vnorm") * norm_c) * 1e6
-        ).cast("long")
-        # struct (c, n) sorts lexicographically: reverse-sorted = highest
-        # cosine first, ties to the lowest centroid id (n = -cid)
-        scored.append(F.struct(cos.alias("c"), F.lit(-cid).cast("long").alias("n")))
-    ranked = F.slice(F.reverse(F.array_sort(F.array(*scored))), 1, nprobe)
+    # reverse-sorted score structs = highest cosine first, ties to the
+    # lowest centroid id
+    ranked = F.slice(F.reverse(F.array_sort(F.array(*_centroid_scores(cents)))), 1, nprobe)
     return v.select(
         F.col(id_col).alias("query_id"),
         F.col("qvec").alias("q_q"),

@@ -421,41 +421,54 @@ def q_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _materialized_event_table(spark: SparkSession, sf_dir: str):
-    """The canonical events→zombi mapping COMMITTED as a real EventTable
-    (tmp dir, built once per session × sf_dir) — the fixture for queries
-    that exercise the table/manifest surface itself rather than a plan
-    over the raw parquet. Sequences come from the same write path the
-    oracle replays (row_number over arrival per (topic, partition)),
-    so DuckDB can reproduce the committed rows relationally."""
+def _committed_fixture(
+    spark: SparkSession, sf_dir: str, namespace: str, payload, schema_config=None, build=None
+):
+    """The canonical events→zombi mapping (``payload`` as the payload
+    column) COMMITTED as a real EventTable in a tmp dir, built once per
+    session × sf_dir under the ``namespace`` memo — the fixtures for
+    queries that exercise the table/manifest surface itself rather than
+    a plan over the raw parquet. Sequences come from the same write path
+    the oracle replays (row_number over arrival per (topic, partition)),
+    so DuckDB can reproduce the committed rows relationally. ``build``
+    runs on the table after its one append, before it is memoized."""
+    import atexit
+    import shutil
     import tempfile
 
     from zombi_spark.ingest.batch import prepare_events
     from zombi_spark.plans.plan_cache import session_cache
     from zombi_spark.table.event_table import EventTable
 
-    memo = session_cache(spark, "zombi_ds_tables")
+    memo = session_cache(spark, namespace)
     table = memo.get(sf_dir)
     if table is None:
-        import atexit
-        import shutil
         ev = zombi_events(spark, sf_dir).select(
             "topic",
             "partition",
-            F.encode("payload_str", "UTF-8").alias("payload"),
+            payload.alias("payload"),
             "timestamp_ms",
             F.lit(None).cast("string").alias("idempotency_key"),
             F.col("arrival").alias("ingest_order"),
         )
-        root = tempfile.mkdtemp(prefix="zombi_ds_")
+        root = tempfile.mkdtemp(prefix=f"{namespace}_")
         # the fixture outlives any one query (session-cached) but not the
         # process — without this, every test/driver session leaves a
         # committed table in /tmp
         atexit.register(shutil.rmtree, root, ignore_errors=True)
-        table = EventTable(spark, root, "events")
+        table = EventTable(spark, root, "events", schema_config=schema_config)
         table.append(prepare_events(ev))
+        if build is not None:
+            build(table)
         memo[sf_dir] = table
     return table
+
+
+def _materialized_event_table(spark: SparkSession, sf_dir: str):
+    """The events mapping committed as-is (the shared datasource fixture)."""
+    return _committed_fixture(
+        spark, sf_dir, "zombi_ds_tables", F.encode("payload_str", "UTF-8")
+    )
 
 
 def q_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,32 +504,9 @@ def _materialized_mor_table(spark: SparkSession, sf_dir: str):
     pristine for the scan queries). The build pins the merge-on-read
     contract: after the takedown commit, the data-file set is unchanged
     — only a position-delete file was added."""
-    import tempfile
-
-    from zombi_spark.ingest.batch import prepare_events
-    from zombi_spark.plans.plan_cache import session_cache
     from zombi_spark.shipping import ensure_package_on_workers
-    from zombi_spark.table.event_table import EventTable
 
-    ensure_package_on_workers(spark)
-    memo = session_cache(spark, "zombi_mor_tables")
-    table = memo.get(sf_dir)
-    if table is None:
-        import atexit
-        import shutil
-
-        ev = zombi_events(spark, sf_dir).select(
-            "topic",
-            "partition",
-            F.encode("payload_str", "UTF-8").alias("payload"),
-            "timestamp_ms",
-            F.lit(None).cast("string").alias("idempotency_key"),
-            F.col("arrival").alias("ingest_order"),
-        )
-        root = tempfile.mkdtemp(prefix="zombi_mor_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        table = EventTable(spark, root, "events")
-        table.append(prepare_events(ev))
+    def takedown(table) -> None:
         files_before = {e["file_path"] for e in table.scan_files()}
         res = table.delete_where("sequence % 10 = 3", mode="merge-on-read")
         if {e["file_path"] for e in table.scan_files()} != files_before:
@@ -525,8 +515,11 @@ def _materialized_mor_table(spark: SparkSession, sf_dir: str):
             )
         if not res.get("rows_removed"):
             raise AssertionError("merge-on-read takedown matched no rows")
-        memo[sf_dir] = table
-    return table
+
+    ensure_package_on_workers(spark)
+    return _committed_fixture(
+        spark, sf_dir, "zombi_mor_tables", F.encode("payload_str", "UTF-8"), build=takedown
+    )
 
 
 def q_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -556,43 +549,19 @@ def _materialized_extraction_table(spark: SparkSession, sf_dir: str):
     table (§1.3) and re-clustered by the extracted ``event_type`` string
     column — the fixture for the r15 categorical-pruning surface: every
     file's Iceberg-truncated string bounds cover one event_type range,
-    so an equality predicate plans a subset of files. Built once per
-    session × sf_dir (same memo discipline as the plain fixture)."""
-    import tempfile
-
-    from zombi_spark.ingest.batch import prepare_events
+    so an equality predicate plans a subset of files."""
     from zombi_spark.ingest.extraction import FieldSpec, TableSchemaConfig
-    from zombi_spark.plans.plan_cache import session_cache
-    from zombi_spark.table.event_table import EventTable
 
-    memo = session_cache(spark, "zombi_extract_tables")
-    table = memo.get(sf_dir)
-    if table is None:
-        import atexit
-        import shutil
+    cfg = TableSchemaConfig(
+        payload_format="json",
+        fields=[
+            FieldSpec(name="event_type", json_path="event_type", data_type="utf8"),
+            FieldSpec(name="value", json_path="value", data_type="float64"),
+            FieldSpec(name="user_id", json_path="user_id", data_type="int64"),
+        ],
+    )
 
-        ev = zombi_events(spark, sf_dir).select(
-            "topic",
-            "partition",
-            F.encode(
-                F.to_json(F.struct("event_type", "value", "user_id")), "UTF-8"
-            ).alias("payload"),
-            "timestamp_ms",
-            F.lit(None).cast("string").alias("idempotency_key"),
-            F.col("arrival").alias("ingest_order"),
-        )
-        cfg = TableSchemaConfig(
-            payload_format="json",
-            fields=[
-                FieldSpec(name="event_type", json_path="event_type", data_type="utf8"),
-                FieldSpec(name="value", json_path="value", data_type="float64"),
-                FieldSpec(name="user_id", json_path="user_id", data_type="int64"),
-            ],
-        )
-        root = tempfile.mkdtemp(prefix="zombi_ext_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        table = EventTable(spark, root, "events", schema_config=cfg)
-        table.append(prepare_events(ev))
+    def recluster(table) -> None:
         # sort-strategy re-cluster on the extracted STRING column: rows
         # are preserved exactly (INV-6), only the layout changes — the
         # string bounds become disjoint ranges the planner prunes on
@@ -603,8 +572,15 @@ def _materialized_extraction_table(spark: SparkSession, sf_dir: str):
             min_input_files=1,
             target_files_per_partition=4,
         )
-        memo[sf_dir] = table
-    return table
+
+    return _committed_fixture(
+        spark,
+        sf_dir,
+        "zombi_extract_tables",
+        F.encode(F.to_json(F.struct("event_type", "value", "user_id")), "UTF-8"),
+        schema_config=cfg,
+        build=recluster,
+    )
 
 
 def q_extracted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -480,6 +480,14 @@ class _Handler(JsonHandler):
                 "topic, partition, ts_min, ts_max) — an unbounded "
                 "delete must be expressed deliberately via retention",
             )
+        mode = str(spec.get("mode", "copy-on-write"))
+        # the client-supplied mode is checked against an explicit
+        # whitelist, never inferred from exception text
+        if mode not in ("copy-on-write", "merge-on-read"):
+            raise HttpError(
+                400,
+                f"unknown delete mode {mode!r}: expected 'copy-on-write' or 'merge-on-read'",
+            )
         pred = conds[0]
         for c in conds[1:]:
             pred = pred & c
@@ -490,14 +498,6 @@ class _Handler(JsonHandler):
                 # the table the delete rewrites
                 _drain(
                     ing, "pre-delete flush did not drain within 600s; nothing was deleted — retry"
-                )
-            mode = str(spec.get("mode", "copy-on-write"))
-            # the client-supplied mode is checked against an explicit
-            # whitelist, never inferred from exception text
-            if mode not in ("copy-on-write", "merge-on-read"):
-                raise HttpError(
-                    400,
-                    f"unknown delete mode {mode!r}: expected 'copy-on-write' or 'merge-on-read'",
                 )
             report = ing.table.delete_where(
                 pred,

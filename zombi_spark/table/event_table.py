@@ -573,6 +573,62 @@ def _entry_admits(entry: dict, constraints: list) -> bool:
     return True
 
 
+def _position_delete_probe(df: DataFrame, dels: list[dict]) -> DataFrame:
+    """``df`` (a parquet scan of data files) widened with the normalized
+    data-file path (``_zdel_file``) and in-file row index (``_zdel_pos``),
+    with the position-delete anti-join applied when ``dels`` (delete file
+    entries: ``file_path``, and ``file_size_bytes`` or ``row_count``) is
+    non-empty — the shared kernel for reads, including the Iceberg-only
+    reader (which drop the helper columns), and delete/compact planning
+    (which group on them)."""
+    # _metadata.file_path is a URI: strip the scheme AND percent-decode
+    # (paths with spaces etc. arrive as %20; delete files record raw
+    # abspaths). A literal '+' in a filename must survive, but
+    # url_decode follows URLDecoder's form-encoding rule (+ → space),
+    # so pre-escape it — this matches Python's urllib unquote.
+    probe = df.withColumn(
+        "_zdel_file",
+        F.url_decode(
+            F.regexp_replace(
+                F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", ""),
+                r"\+",
+                "%2B",
+            )
+        ),
+    ).withColumn("_zdel_pos", F.col("_metadata.row_index"))
+    if not dels:
+        return probe
+    dd = df.sparkSession.read.parquet(*[d["file_path"] for d in dels]).select(
+        F.col("file_path").alias("_zdel_file"), F.col("pos").alias("_zdel_pos")
+    )
+    # broadcast gate on BYTES, not rows: each tombstone row carries a
+    # full data-file path string, so a row cap alone can admit a
+    # multi-hundred-MB broadcast (driver-memory risk, guide §5). The
+    # on-disk delete parquet is a sound proxy for the built relation's
+    # scale; entries without a recorded size estimate conservatively.
+    est_bytes = sum(
+        d.get("file_size_bytes", d.get("row_count", 0) * 64) for d in dels
+    )
+    if est_bytes <= 64 * 1024 * 1024:
+        dd = F.broadcast(dd)
+    return probe.join(dd, ["_zdel_file", "_zdel_pos"], "left_anti")
+
+
+def _apply_position_deletes(df: DataFrame, dels: list[dict]) -> DataFrame:
+    """Anti-join ``df`` (a parquet scan of data files) against the
+    position-delete files: a row is dead iff some delete file holds its
+    exact (data file path, row index) — Iceberg v2 merge-on-read.
+    Data-file paths are fresh UUIDs on every write/rewrite, so a
+    position can never mis-apply to a later file; positions whose data
+    file has since been rewritten match nothing (dead weight until
+    compaction drops the delete file). The delete side broadcasts below
+    a byte cap (takedowns are small by nature); above it the join falls
+    back to shuffle + AQE."""
+    if not dels:
+        return df
+    return _position_delete_probe(df, dels).drop("_zdel_file", "_zdel_pos")
+
+
 class EventTable:
     """A zombi event table rooted at ``{root}/{name}``.
 
@@ -1058,60 +1114,6 @@ class EventTable:
             return []
         return list(self._active_delete_files(version))
 
-    def _apply_position_deletes(
-        self, df: DataFrame, dels: list[dict]
-    ) -> DataFrame:
-        """Anti-join ``df`` (a parquet scan of manifest files) against
-        the position-delete files: a row is dead iff some delete file
-        holds its exact (data file path, row index) — Iceberg v2
-        merge-on-read. Data-file paths are fresh UUIDs on every
-        write/rewrite, so a position can never mis-apply to a later
-        file; positions whose data file has since been rewritten match
-        nothing (dead weight until compaction drops the delete file).
-        The delete side broadcasts below a row cap (takedowns are small
-        by nature); above it the join falls back to shuffle + AQE."""
-        if not dels:
-            return df
-        return self._position_delete_probe(df, dels).drop("_zdel_file", "_zdel_pos")
-
-    def _position_delete_probe(self, df: DataFrame, dels: list[dict]) -> DataFrame:
-        """``df`` widened with the normalized data-file path
-        (``_zdel_file``) and in-file row index (``_zdel_pos``), with the
-        position-delete anti-join applied when ``dels`` is non-empty —
-        the shared kernel for reads (which drop the helper columns) and
-        delete/compact planning (which group on them)."""
-        # _metadata.file_path is a URI: strip the scheme AND percent-decode
-        # (paths with spaces etc. arrive as %20; delete files record raw
-        # abspaths). A literal '+' in a filename must survive, but
-        # url_decode follows URLDecoder's form-encoding rule (+ → space),
-        # so pre-escape it — this matches Python's urllib unquote.
-        probe = df.withColumn(
-            "_zdel_file",
-            F.url_decode(
-                F.regexp_replace(
-                    F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", ""),
-                    r"\+",
-                    "%2B",
-                )
-            ),
-        ).withColumn("_zdel_pos", F.col("_metadata.row_index"))
-        if not dels:
-            return probe
-        dd = self.spark.read.parquet(*[d["file_path"] for d in dels]).select(
-            F.col("file_path").alias("_zdel_file"), F.col("pos").alias("_zdel_pos")
-        )
-        # broadcast gate on BYTES, not rows: each tombstone row carries a
-        # full data-file path string, so a row cap alone can admit a
-        # multi-hundred-MB broadcast (driver-memory risk, guide §5). The
-        # on-disk delete parquet is a sound proxy for the built relation's
-        # scale; entries without a recorded size estimate conservatively.
-        est_bytes = sum(
-            d.get("file_size_bytes", d.get("row_count", 0) * 64) for d in dels
-        )
-        if est_bytes <= 64 * 1024 * 1024:
-            dd = F.broadcast(dd)
-        return probe.join(dd, ["_zdel_file", "_zdel_pos"], "left_anti")
-
     def scan_files(
         self,
         version: int | None = None,
@@ -1286,7 +1288,7 @@ class EventTable:
         if files:
             # merge-on-read: the planned files may hold tombstoned rows
             # (the row-count planning over-covers, never under-covers)
-            df = self._apply_position_deletes(
+            df = _apply_position_deletes(
                 df,
                 self._active_delete_files(
                     self.latest_version() if version is None else version
@@ -1912,7 +1914,7 @@ class EventTable:
         ]
         df = self._read_file_list(files)
         if files:
-            df = self._apply_position_deletes(
+            df = _apply_position_deletes(
                 df, self._active_delete_files(version)
             )
         return df
@@ -2070,7 +2072,7 @@ class EventTable:
         if files:
             # merge-on-read parity with copy-on-write: a taken-down row's
             # key leaves the idempotency history in both modes
-            probe = self._apply_position_deletes(
+            probe = _apply_position_deletes(
                 probe, self._active_delete_files(version)
             )
         return probe.select("topic", "partition", "idempotency_key")
@@ -2303,7 +2305,7 @@ class EventTable:
         (Iceberg v2 position deletes: columns ``file_path``, ``pos``)
         and committed as a delete-file delta — O(matching rows), never
         O(rewritten bytes). Every read path anti-joins the active
-        delete files (:meth:`_apply_position_deletes`); compaction
+        delete files (:func:`_apply_position_deletes`); compaction
         applies them and drops the consumed delete files, migrating
         merge-on-read deletes back to pure data files. Data-file paths
         are fresh UUIDs on every write, so a recorded position can
@@ -2351,7 +2353,7 @@ class EventTable:
         # phase 1: per-file match counts over LIVE rows (column-pruned
         # scan; stats and the idempotency-key bloom prune row groups
         # before decode; prior merge-on-read tombstones anti-joined out)
-        hits = self._position_delete_probe(
+        hits = _position_delete_probe(
             self._read_file_list(sorted(candidates)), active_dels
         ).where(hit)
         if mode == "merge-on-read":
@@ -2388,7 +2390,7 @@ class EventTable:
         # carrying them into the rewrite would resurrect them, since the
         # tombstones point at the OLD paths)
         inputs = [candidates[p] for p in matched]
-        survivors = self._apply_position_deletes(
+        survivors = _apply_position_deletes(
             self._read_file_list(sorted(matched)), active_dels
         ).where(~hit)
         added = self._stage_and_move(
@@ -2639,7 +2641,7 @@ class EventTable:
         # delete files it fully consumes — compaction is how
         # merge-on-read deletes become pure data
         active_dels = self._active_delete_files(expected_parent)
-        df = self._apply_position_deletes(self._read_file_list(all_paths), active_dels)
+        df = _apply_position_deletes(self._read_file_list(all_paths), active_dels)
         shape = self._rewrite_shape(inputs)
         cap = None
         if target_files_per_partition > 1 and shape["rows_per_dir"]:

@@ -31,8 +31,12 @@ and one metadata JSON — it neither lists nor reads the snapshot log. A
 commit that removes files (compaction, retention), or a version with no
 previous Avro list, writes one full manifest of the survivors plus
 DELETED tombstones, whose row and byte counts come from the parent
-version's log entries. Cost tracks snapshot count, not data size, and
-:meth:`EventTable.expire_snapshots` bounds the count.
+version's log entries; :func:`rewrite_manifests` writes the same full
+list. Every list ends with one delete manifest of the active
+position-delete files, if any. :func:`_write_list` is the one list
+writer and :func:`_write_manifest` binds every manifest to the current
+schema and its partition spec. Cost tracks snapshot count, not data
+size, and :meth:`EventTable.expire_snapshots` bounds the count.
 
 Self-heal: the metadata is derived state, so a failed write is logged
 and the data commit stands. The cursor did not move, so the next call
@@ -48,6 +52,8 @@ import logging
 import os
 import time
 import uuid
+
+from zombi_spark.table import manifests as MF
 
 
 def snapshot_id_long(snapshot_hex: str) -> int:
@@ -290,10 +296,6 @@ def _avro_partition_fields(meta: dict) -> list[dict]:
     ]
 
 
-def _norm_entry(e) -> dict:
-    return e if isinstance(e, dict) else {"file_path": e}
-
-
 def _ensure_unpartitioned_spec(meta: dict) -> int:
     """The unpartitioned partition spec's id, appending it to the
     metadata when absent — position-delete files reference data files
@@ -308,87 +310,94 @@ def _ensure_unpartitioned_spec(meta: dict) -> int:
     return spec_id
 
 
-def _data_manifest(mdir: str, meta: dict, entries, snapshot_id: int, seq_num: int) -> dict:
-    """One Avro data manifest of (status, entry) pairs bound to the
-    current schema and partition spec."""
-    from zombi_spark.table import manifests as MF
-
+def _write_manifest(mdir: str, meta: dict, content: int, entries, sid: int, seq_num: int) -> dict:
+    """One Avro manifest of (status, log entry) pairs bound to the
+    current schema: data files to the default partition spec,
+    position-delete files to the unpartitioned one."""
+    if content == MF.DATA:
+        spec_id, pfields = meta["default-spec-id"], _avro_partition_fields(meta)
+        fids, types = _field_ids(meta), _field_types(meta)
+        files = ((st, MF.entry_to_data_file(e, fids, pfields, types)) for st, e in entries)
+    else:
+        spec_id, pfields = _ensure_unpartitioned_spec(meta), []
+        files = ((st, MF.delete_entry_to_data_file(e)) for st, e in entries)
     schema_id = meta["current-schema-id"]
-    spec_id = meta["default-spec-id"]
     return MF.write_manifest(
-        mdir, entries, snapshot_id, seq_num, _field_ids(meta),
-        _avro_partition_fields(meta), json.dumps(meta["schemas"][schema_id]),
-        json.dumps(meta["partition-specs"][spec_id]["fields"]),
-        schema_id=schema_id, spec_id=spec_id, field_types=_field_types(meta),
+        mdir, content, files, sid, seq_num,
+        json.dumps(meta["schemas"][schema_id]), schema_id,
+        pfields, json.dumps(meta["partition-specs"][spec_id]["fields"]), spec_id,
     )
 
 
-def _delete_manifest(
-    mdir: str, meta: dict, dels: list[dict], snapshot_id: int, seq_num: int, added=()
-) -> dict:
-    """One Avro DELETE manifest of the active position-delete files."""
-    from zombi_spark.table import manifests as MF
+def _with_status(entries: list[dict], added) -> list[tuple[int, dict]]:
+    """(ADDED if ``added`` names the entry's file else EXISTING, entry)."""
+    paths = {e["file_path"] for e in added}
+    return [(MF.ADDED if e["file_path"] in paths else MF.EXISTING, e) for e in entries]
 
-    return MF.write_delete_manifest(
-        mdir, dels, snapshot_id, seq_num,
-        json.dumps(meta["schemas"][meta["current-schema-id"]]),
-        added_paths={d["file_path"] for d in added},
-        spec_id=_ensure_unpartitioned_spec(meta),
-    )
+
+def _write_list(
+    table, meta: dict, version: int, sid: int,
+    carried=None, added=(), tombstones=(), added_deletes=(),
+) -> str:
+    """Write log version ``version``'s manifests and manifest list;
+    returns the list path. ``carried`` (an append) is the previous
+    list's data manifests, extended by one manifest of ``added``
+    (iceberg_storage.rs:1087-1110). Without it the list is full: one
+    manifest of every active file (ADDED when ``added`` names it, else
+    EXISTING) plus ``tombstones``. Either way the active position-delete
+    files get one delete manifest — regenerated in full each commit, it
+    costs O(active delete files), which takedowns keep tiny."""
+    mdir = metadata_dir(table.path)
+    seq_num = version + 1
+    if carried is None:
+        carried = []
+        entries = _with_status(table._active_files(version), added) + list(tombstones)
+    else:
+        entries = [(MF.ADDED, e) for e in added]
+    manifest_files = carried + [_write_manifest(mdir, meta, MF.DATA, entries, sid, seq_num)]
+    dels = table._active_delete_files(version)
+    if dels:
+        entries = _with_status(dels, added_deletes)
+        manifest_files.append(_write_manifest(mdir, meta, MF.DELETES, entries, sid, seq_num))
+    return MF.write_manifest_list(mdir, sid, manifest_files)
 
 
 def _write_commit_manifests(table, meta: dict, snap: dict, sid: int, prev: dict | None) -> str:
     """Write log version ``snap``'s Avro manifest(s) + manifest list;
     returns the list path. ``prev`` is the Iceberg snapshot of the parent
     version, or None when the metadata has none. Appends carry the
-    previous list forward with one new manifest
-    (iceberg_storage.rs:1087-1110); removal commits, and versions with no
-    previous list, write one full manifest of the survivors plus DELETED
-    tombstones."""
-    from zombi_spark.table import manifests as MF
-
-    mdir = metadata_dir(table.path)
+    previous list forward with one new manifest; removal commits, and
+    versions with no previous list, write the full list with DELETED
+    tombstones for the removed files."""
     version = snap["version"]
-    seq_num = version + 1
-    added = [_norm_entry(e) for e in snap.get("added", [])]
+    added = [table._norm_entry(e) for e in snap.get("added", [])]
+    added_deletes = snap.get("added_deletes", [])
     removed = snap.get("removed", [])
     prev_list = prev["manifest-list"] if prev is not None else ""
     if not removed and prev_list.endswith(".avro") and os.path.isfile(prev_list):
-        # carry DATA manifests only: the delete-manifest set is
-        # regenerated in full each commit (O(active delete files) — tiny)
-        prior = [m for m in MF.read_manifest_list(prev_list) if m.get("content", 0) == 0]
-        mf = _data_manifest(mdir, meta, [(MF.ADDED, e) for e in added], sid, seq_num)
-        manifest_files = prior + [mf]
-    else:
-        added_paths = {e["file_path"] for e in added}
-        entries = [
-            (MF.ADDED if e["file_path"] in added_paths else MF.EXISTING, e)
-            for e in table._active_files(version)
+        carried = [
+            m for m in MF.read_manifest_list(prev_list) if m.get("content", MF.DATA) == MF.DATA
         ]
-        # tombstones carry the removed files' real row/byte counts from
-        # the parent's log entries: without them deleted_rows_count reads
-        # 0 to every external consumer — a removal that "removed nothing".
-        # A parent the metadata lacks may have expired from the log, so
-        # its tombstones go without counts.
-        parent = (
-            {e["file_path"]: e for e in table._active_files(version - 1)}
-            if removed and prev is not None
-            else {}
-        )
-        for p in removed:
-            stats = parent.get(p, {})
-            entries.append((MF.DELETED, {
-                "file_path": p,
-                "partition_dir": os.path.relpath(os.path.dirname(p), table.data_path),
-                **{k: stats[k] for k in ("row_count", "file_size_bytes") if k in stats},
-            }))
-        manifest_files = [_data_manifest(mdir, meta, entries, sid, seq_num)]
-    dels = table._active_delete_files(version)
-    if dels:
-        manifest_files.append(
-            _delete_manifest(mdir, meta, dels, sid, seq_num, snap.get("added_deletes", []))
-        )
-    return MF.write_manifest_list(mdir, sid, manifest_files)
+        return _write_list(table, meta, version, sid, carried, added, added_deletes=added_deletes)
+    # tombstones carry the removed files' real row/byte counts from the
+    # parent's log entries: without them deleted_rows_count reads 0 to
+    # every external consumer — a removal that "removed nothing". A
+    # parent the metadata lacks may have expired from the log, so its
+    # tombstones go without counts.
+    parent = (
+        {e["file_path"]: e for e in table._active_files(version - 1)}
+        if removed and prev is not None
+        else {}
+    )
+    tombstones = []
+    for p in removed:
+        stats = parent.get(p, {})
+        tombstones.append((MF.DELETED, {
+            "file_path": p,
+            "partition_dir": os.path.relpath(os.path.dirname(p), table.data_path),
+            **{k: stats[k] for k in ("row_count", "file_size_bytes") if k in stats},
+        }))
+    return _write_list(table, meta, version, sid, None, added, tombstones, added_deletes)
 
 
 def _append_snapshot(table, meta: dict, snap: dict) -> None:
@@ -485,8 +494,6 @@ def write_metadata_for_commit(table, snap: dict) -> str | None:
 def _referenced_avro(meta: dict) -> set[str]:
     """Every Avro file any snapshot of ``meta`` references (manifest
     lists + their manifests) — readable or not, the LIST path counts."""
-    from zombi_spark.table import manifests as MF
-
     refs: set[str] = set()
     for s in meta.get("snapshots", []):
         ml = s.get("manifest-list", "")
@@ -509,7 +516,7 @@ def _gc_unreferenced_metadata(
     mdir: str,
     meta: dict,
     current_file: str,
-    prior_refs: set[str] | None = None,
+    prior_refs: set[str],
     grace_s: float = 3600.0,
 ) -> list[str]:
     """Delete Avro manifests/manifest-lists referenced by no LIVE
@@ -527,11 +534,7 @@ def _gc_unreferenced_metadata(
     are either crash orphans or an in-flight commit's fresh output, and
     only get reclaimed past ``grace_s`` (the remove_orphans /
     remove_orphan_files cutoff pattern)."""
-    import time as _time
-
-    from zombi_spark.table import manifests as MF
-
-    cutoff = _time.time() - grace_s
+    cutoff = time.time() - grace_s
 
     def _old_enough(path: str) -> bool:
         try:
@@ -539,27 +542,17 @@ def _gc_unreferenced_metadata(
         except OSError:
             return False  # vanished underneath us
 
-    live: set[str] = set()
-    for s in meta.get("snapshots", []):
-        ml = s.get("manifest-list", "")
-        if ml.endswith(".avro") and os.path.isfile(ml):
-            live.add(os.path.abspath(ml))
-            try:
-                for mf in MF.read_manifest_list(ml):
-                    live.add(os.path.abspath(mf["manifest_path"]))
-            except Exception:
-                continue  # unreadable list: keep its file, GC nothing of it
+    live = _referenced_avro(meta)
     keep_json = {os.path.abspath(current_file)} | {
         os.path.abspath(e["metadata-file"]) for e in meta.get("metadata-log", [])
     }
-    known = prior_refs if prior_refs is not None else set()
     removed: list[str] = []
     for f in os.listdir(mdir):
         full = os.path.abspath(os.path.join(mdir, f))
         if (
             f.endswith(".avro")
             and full not in live
-            and (full in known or _old_enough(full))
+            and (full in prior_refs or _old_enough(full))
         ):
             os.remove(full)
             removed.append(full)
@@ -577,7 +570,8 @@ def _gc_unreferenced_metadata(
 def rewrite_manifests(table) -> str:
     """Iceberg's ``rewrite_manifests`` action, metadata-only: merge the
     CURRENT snapshot's carry-forward manifest list into ONE full manifest
-    of its active files (all EXISTING, no data touched), bump the
+    of its active files (all EXISTING, no data touched; the full list a
+    removal commit writes, without tombstones), bump the
     metadata version, and GC the now-unreferenced manifests. Bounds the
     list length for append-only tables between compactions (compaction
     resets the list as a side effect; this does it without rewriting a
@@ -588,23 +582,15 @@ def rewrite_manifests(table) -> str:
     rather than their original data sequence numbers (we don't track
     per-file commit provenance in the active-file entries; no reader here
     consumes them). Returns the new metadata path."""
-    from zombi_spark.table import manifests as MF
-
     meta = current_metadata(table.path)
     if meta is None or meta["current-snapshot-id"] == -1:
         raise ValueError("no current snapshot to rewrite manifests for")
     cur = next(
         s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
     )
-    sid, seq_num = cur["snapshot-id"], cur["sequence-number"]
     mdir = metadata_dir(table.path)
     prior_refs = _referenced_avro(meta)
-    entries = [(MF.EXISTING, e) for e in table._active_files(seq_num - 1)]
-    mfs = [_data_manifest(mdir, meta, entries, sid, seq_num)]
-    dels = table._active_delete_files(seq_num - 1)
-    if dels:
-        mfs.append(_delete_manifest(mdir, meta, dels, sid, seq_num))
-    cur["manifest-list"] = MF.write_manifest_list(mdir, sid, mfs)
+    cur["manifest-list"] = _write_list(table, meta, cur["sequence-number"] - 1, cur["snapshot-id"])
     _append_metadata_log(mdir, meta)
     meta["last-updated-ms"] = int(time.time() * 1000)
     out = _write_next_metadata(mdir, meta, table.backend)

@@ -69,38 +69,15 @@ def read_via_iceberg_metadata(
     # suppress the one-task-per-path listing job for big file lists (the
     # manifests already carry the stats) — shared locked helper, see
     # EventTable._read_file_list
-    from zombi_spark.table.event_table import _discovery_threshold
+    from zombi_spark.table.event_table import _apply_position_deletes, _discovery_threshold
 
     with _discovery_threshold(spark, len(files)):
         df = spark.read.schema(schema).option("basePath", data_root).parquet(*files)
     # v2 merge-on-read: anti-join the snapshot's position-delete files
     # (content=1 manifests) on (data file path, row index) — what any
     # stock v2 reader does while scanning
-    dels = [d["file_path"] for d in MF.live_delete_files(snap["manifest-list"])]
-    if dels:
-        from pyspark.sql import functions as F
-
-        dd = spark.read.parquet(*dels).select(
-            F.col("file_path").alias("_zdel_file"), F.col("pos").alias("_zdel_pos")
-        )
-        df = (
-            df.withColumn(
-                "_zdel_file",
-                # strip scheme + percent-decode ('+' kept literal) so the
-                # URI form matches the raw abspaths delete files record —
-                # same normalization as EventTable._position_delete_probe
-                F.url_decode(
-                    F.regexp_replace(
-                        F.regexp_replace(
-                            F.col("_metadata.file_path"), "^file:(//)?", ""
-                        ),
-                        r"\+",
-                        "%2B",
-                    )
-                ),
-            )
-            .withColumn("_zdel_pos", F.col("_metadata.row_index"))
-            .join(F.broadcast(dd), ["_zdel_file", "_zdel_pos"], "left_anti")
-            .drop("_zdel_file", "_zdel_pos")
-        )
-    return df
+    dels = [
+        {"file_path": d["file_path"], "file_size_bytes": d["file_size_in_bytes"]}
+        for d in MF.live_delete_files(snap["manifest-list"])
+    ]
+    return _apply_position_deletes(df, dels)

@@ -19,6 +19,14 @@ over the reference's simplified schema for STOCK-reader compatibility:
     follow the spec and the ported watermark-recovery test decodes
     little-endian accordingly.
 
+One writer, :func:`write_manifest`, writes every manifest — data
+(``content=0``) and position-delete (``content=1``) alike — from
+``(status, data_file)`` pairs built by :func:`entry_to_data_file` or
+:func:`delete_entry_to_data_file`; the entry wrap, per-status counts,
+container header and ``manifest_file`` record are written once for both.
+One generator, :func:`live_files`, walks a manifest list's live entries
+for the readers and the watermark recovery.
+
 Manifest-list maintenance mirrors the reference's carry-forward: an
 append snapshot adds one manifest to the previous snapshot's list; a
 snapshot that removes files (compaction / base materialization) rewrites
@@ -243,7 +251,8 @@ MANIFEST_LIST_SCHEMA = {
     ],
 }
 
-ADDED, EXISTING, DELETED = 1, 0, 2
+ADDED, EXISTING, DELETED = 1, 0, 2  # manifest_entry status
+DATA, DELETES = 0, 1  # manifest content
 
 
 # ------------------------------------------------------------ entry build
@@ -355,173 +364,100 @@ POS_DELETE_PATH_FID = 2147483546  # file_path (string)
 POS_DELETE_POS_FID = 2147483545  # pos (long)
 
 
-def write_delete_manifest(
-    mdir: str,
-    delete_entries: list[dict],
-    snapshot_id: int,
-    sequence_number: int,
-    schema_json: str,
-    added_paths: set | None = None,
-    spec_id: int = 1,
-) -> dict:
-    """Write a DELETE manifest (Iceberg v2 ``content=1``) of the active
-    position-delete files; returns its manifest_file record.
-
-    The delete files reference data files across storage partitions, so
-    they belong to the UNPARTITIONED spec (``spec_id``, an empty
-    partition struct) — spec-legal, and partition pruning for them is
-    replaced by the file_path lower/upper bounds each entry carries
-    (min/max referenced data file, reserved field id 2147483546).
-
-    Sequence numbers: every entry takes the CURRENT sequence number,
-    including carried (EXISTING) ones. For position deletes this is
-    sound by construction — a reader applies a delete file to data
-    files with data-sequence ≤ the delete's, and matching is by exact
-    (file_path, pos); claiming a too-new sequence can only add no-op
-    anti-joins against files the positions never name, never an
-    under-delete."""
-    schema = manifest_entry_schema([])
-    added_paths = added_paths or set()
-    records = []
-    counts = {ADDED: 0, EXISTING: 0, DELETED: 0}
-    rows = {ADDED: 0, EXISTING: 0, DELETED: 0}
-    for d in sorted(delete_entries, key=lambda x: x["file_path"]):
-        status = ADDED if d["file_path"] in added_paths else EXISTING
-        counts[status] += 1
-        rows[status] += d.get("row_count", 0)
-        refs = sorted(d.get("referenced_files") or [])
-        bounds = (
-            {
-                "lower_bounds": [
-                    {
-                        "key": POS_DELETE_PATH_FID,
-                        "value": encode_bound(os.path.abspath(refs[0]), "string"),
-                    }
-                ],
-                "upper_bounds": [
-                    {
-                        "key": POS_DELETE_PATH_FID,
-                        "value": encode_bound(os.path.abspath(refs[-1]), "string"),
-                    }
-                ],
-            }
-            if refs
-            else {"lower_bounds": None, "upper_bounds": None}
+def delete_entry_to_data_file(entry: dict) -> dict:
+    """Position-delete file entry (event_table snapshot) → Avro data_file
+    record (``content=1``). The delete file references data files across
+    storage partitions, so it binds to the UNPARTITIONED spec (an empty
+    partition struct); partition pruning is replaced by the file_path
+    lower/upper bounds (min/max referenced data file, reserved field id
+    2147483546)."""
+    refs = sorted(entry.get("referenced_files") or [])
+    lower = upper = None
+    if refs:
+        lower, upper = (
+            [{"key": POS_DELETE_PATH_FID, "value": encode_bound(os.path.abspath(p), "string")}]
+            for p in (refs[0], refs[-1])
         )
-        records.append(
-            {
-                "status": status,
-                "snapshot_id": snapshot_id,
-                "sequence_number": sequence_number,
-                "file_sequence_number": sequence_number,
-                "data_file": {
-                    "content": 1,  # POSITION_DELETES
-                    "file_path": os.path.abspath(d["file_path"]),
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": d.get("row_count", 0),
-                    "file_size_in_bytes": d.get("file_size_bytes", 0),
-                    "column_sizes": None,
-                    "value_counts": None,
-                    "null_value_counts": None,
-                    "nan_value_counts": None,
-                    **bounds,
-                    "key_metadata": None,
-                    "split_offsets": None,
-                    "sort_order_id": None,
-                },
-            }
-        )
-    path = os.path.join(mdir, f"{uuid.uuid4().hex}-m0.avro")
-    avro_io.write_container(
-        path,
-        schema,
-        records,
-        metadata={
-            "schema": schema_json,
-            "schema-id": "0",
-            "partition-spec": "[]",
-            "partition-spec-id": str(spec_id),
-            "format-version": "2",
-            "content": "deletes",
-        },
-    )
     return {
-        "manifest_path": os.path.abspath(path),
-        "manifest_length": os.path.getsize(path),
-        "partition_spec_id": spec_id,
-        "content": 1,  # deletes
-        "sequence_number": sequence_number,
-        "min_sequence_number": sequence_number,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": counts[ADDED],
-        "existing_files_count": counts[EXISTING],
-        "deleted_files_count": counts[DELETED],
-        "added_rows_count": rows[ADDED],
-        "existing_rows_count": rows[EXISTING],
-        "deleted_rows_count": rows[DELETED],
-        "partitions": None,
+        "content": 1,  # POSITION_DELETES
+        "file_path": os.path.abspath(entry["file_path"]),
+        "file_format": "PARQUET",
+        "partition": {},
+        "record_count": entry.get("row_count", 0),
+        "file_size_in_bytes": entry.get("file_size_bytes", 0),
+        "column_sizes": None,
+        "value_counts": None,
+        "null_value_counts": None,
+        "nan_value_counts": None,
+        "lower_bounds": lower,
+        "upper_bounds": upper,
         "key_metadata": None,
+        "split_offsets": None,
+        "sort_order_id": None,
     }
 
 
 def write_manifest(
     mdir: str,
-    entries: list[tuple[int, dict]],
+    content: int,
+    entries,
     snapshot_id: int,
     sequence_number: int,
-    field_ids: dict[str, int],
-    partition_fields: list[dict],
     schema_json: str,
+    schema_id: int,
+    partition_fields: list[dict],
     spec_json: str,
-    schema_id: int = 0,
-    spec_id: int = 0,
-    field_types: dict[str, str] | None = None,
+    spec_id: int,
 ) -> dict:
-    """Write one Avro manifest of (status, json-entry) pairs; returns its
-    manifest_file record for the manifest list. ``field_types`` (name →
-    iceberg type) lets entries' extracted-column ``col_stats`` ride as
-    spec bounds — see entry_to_data_file."""
-    schema = manifest_entry_schema(partition_fields)
+    """Write one Avro manifest of ``content`` (:data:`DATA` or
+    :data:`DELETES`) from ``(status, data_file)`` pairs
+    (:func:`entry_to_data_file` / :func:`delete_entry_to_data_file`
+    records); returns its manifest_file record for the manifest list.
+
+    The header's ids must track the EMBEDDED schema and spec: a stock
+    reader resolving by id against the table metadata would otherwise
+    resolve the pre-evolution schema after a column-add.
+
+    Sequence numbers: every entry takes ``sequence_number``, carried
+    (EXISTING) ones included. For position deletes this is sound by
+    construction — a reader applies a delete file to data files with
+    data-sequence ≤ the delete's, and matching is by exact (file_path,
+    pos); claiming a too-new sequence can only add no-op anti-joins
+    against files the positions never name, never an under-delete."""
     records = []
     counts = {ADDED: 0, EXISTING: 0, DELETED: 0}
     rows = {ADDED: 0, EXISTING: 0, DELETED: 0}
-    for status, e in entries:
+    for status, data_file in entries:
         counts[status] += 1
-        rows[status] += e.get("row_count", 0)
+        rows[status] += data_file["record_count"]
         records.append(
             {
                 "status": status,
                 "snapshot_id": snapshot_id,
                 "sequence_number": sequence_number,
                 "file_sequence_number": sequence_number,
-                "data_file": entry_to_data_file(
-                    e, field_ids, partition_fields, field_types
-                ),
+                "data_file": data_file,
             }
         )
     path = os.path.join(mdir, f"{uuid.uuid4().hex}-m0.avro")
     avro_io.write_container(
         path,
-        schema,
+        manifest_entry_schema(partition_fields),
         records,
         metadata={
-            # the header ids must track the EMBEDDED schema/spec — a
-            # stock reader resolving by id against table metadata would
-            # otherwise resolve the pre-evolution schema after column-add
             "schema": schema_json,
             "schema-id": str(schema_id),
             "partition-spec": spec_json,
             "partition-spec-id": str(spec_id),
             "format-version": "2",
-            "content": "data",
+            "content": "data" if content == DATA else "deletes",
         },
     )
     return {
         "manifest_path": os.path.abspath(path),
         "manifest_length": os.path.getsize(path),
         "partition_spec_id": spec_id,
-        "content": 0,  # data
+        "content": content,
         "sequence_number": sequence_number,
         "min_sequence_number": sequence_number,
         "added_snapshot_id": snapshot_id,
@@ -556,33 +492,30 @@ def read_manifest_entries(path: str) -> list[dict]:
     return records
 
 
+def live_files(manifest_list_path: str, content: int):
+    """Yield the non-DELETED ``data_file`` records of the list's
+    manifests of ``content`` — the one walk over a snapshot's live
+    entries."""
+    for mf in read_manifest_list(manifest_list_path):
+        if mf.get("content", DATA) == content:
+            for entry in read_manifest_entries(mf["manifest_path"]):
+                if entry["status"] != DELETED:
+                    yield entry["data_file"]
+
+
 def live_data_files(manifest_list_path: str) -> list[dict]:
-    """All non-DELETED data_file records reachable from a manifest list —
-    the file set an external engine would scan for the snapshot. DELETE
+    """All live data_file records reachable from a manifest list — the
+    file set an external engine would scan for the snapshot. DELETE
     manifests (content=1, position-delete files) are not data; see
     :func:`live_delete_files`."""
-    out = []
-    for mf in read_manifest_list(manifest_list_path):
-        if mf.get("content", 0) != 0:
-            continue
-        for entry in read_manifest_entries(mf["manifest_path"]):
-            if entry["status"] != DELETED:
-                out.append(entry["data_file"])
-    return out
+    return list(live_files(manifest_list_path, DATA))
 
 
 def live_delete_files(manifest_list_path: str) -> list[dict]:
-    """All non-DELETED position-delete file records reachable from a
-    manifest list (content=1 manifests) — what a stock v2 reader would
-    anti-join while scanning the snapshot."""
-    out = []
-    for mf in read_manifest_list(manifest_list_path):
-        if mf.get("content", 0) != 1:
-            continue
-        for entry in read_manifest_entries(mf["manifest_path"]):
-            if entry["status"] != DELETED:
-                out.append(entry["data_file"])
-    return out
+    """All live position-delete file records reachable from a manifest
+    list (content=1 manifests) — what a stock v2 reader would anti-join
+    while scanning the snapshot."""
+    return list(live_files(manifest_list_path, DELETES))
 
 
 def committed_watermarks_from_manifests(
@@ -608,24 +541,20 @@ def committed_watermarks_from_manifests(
     skipped (never wrong, possibly incomplete; the authoritative
     recovery path remains the snapshot summary's carried watermarks, A4)."""
     per_partition: dict[int, int] = {}
-    for mf in read_manifest_list(manifest_list_path):
-        if mf.get("content", 0) != 0:
-            continue  # delete manifests carry no sequence watermarks
-        for entry in read_manifest_entries(mf["manifest_path"]):
-            if entry["status"] == DELETED:
-                continue
-            upper = entry["data_file"].get("upper_bounds")
-            lower = entry["data_file"].get("lower_bounds")
-            if not upper or not lower:
-                continue
-            up_id = {kv["key"]: kv["value"] for kv in upper}
-            lo_id = {kv["key"]: kv["value"] for kv in lower}
-            if sequence_field_id not in up_id or partition_field_id not in up_id:
-                continue
-            if up_id[partition_field_id] != lo_id.get(partition_field_id):
-                continue  # mixed-partition file: not attributable
-            seq = decode_bound(up_id[sequence_field_id], "long")
-            part = decode_bound(up_id[partition_field_id], "int")
-            if part not in per_partition or per_partition[part] < seq:
-                per_partition[part] = seq
+    # delete manifests carry no sequence watermarks
+    for data_file in live_files(manifest_list_path, DATA):
+        upper = data_file.get("upper_bounds")
+        lower = data_file.get("lower_bounds")
+        if not upper or not lower:
+            continue
+        up_id = {kv["key"]: kv["value"] for kv in upper}
+        lo_id = {kv["key"]: kv["value"] for kv in lower}
+        if sequence_field_id not in up_id or partition_field_id not in up_id:
+            continue
+        if up_id[partition_field_id] != lo_id.get(partition_field_id):
+            continue  # mixed-partition file: not attributable
+        seq = decode_bound(up_id[sequence_field_id], "long")
+        part = decode_bound(up_id[partition_field_id], "int")
+        if part not in per_partition or per_partition[part] < seq:
+            per_partition[part] = seq
     return per_partition
